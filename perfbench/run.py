@@ -18,12 +18,13 @@ one has returned):
 
 A run generates (or reuses) the feed for ``--seed`` in a child process,
 then sets up once: a fresh JVM and SparkSession on ``local[nproc]``,
-``pin_session`` with its package ship, and a warm-up refresh. It then
-measures rounds of the workload's refreshes plus one cookbook pass while
-the next round still fits in ``--seconds`` (always at least one). Outputs
-are checked against the DuckDB oracle after each round, outside the timed
-region. ``peak_rss_mb`` adds the driver JVM's peak resident memory over the
-run to this process's peak before the oracle is loaded into it.
+``pin_session`` with its package ship, and warm-up refreshes. It then
+measures rounds of one cookbook pass with the workload's refreshes spread
+through it, while the next round still fits in ``--seconds`` (always at
+least one). Outputs are checked against the DuckDB oracle after each round,
+outside the timed region. ``peak_rss_mb`` adds the driver JVM's peak
+resident memory over the run to this process's peak before the oracle is
+loaded into it.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs the rounds
 with a span around every layer call (``spans.py``) and prints the per-layer
@@ -69,12 +70,13 @@ from spans import Tracer, median_metrics, round_metrics  # noqa: E402
 class Workload:
     n_trips: int
     materialized: str  # "view" or "table"
+    warmups: int  # refreshes in set-up, before any is measured
     refreshes: int  # per round; refresh_s is their median over all rounds
 
 
 WORKLOADS = {
-    "mta-views": Workload(1_000, "view", refreshes=3),
-    "mta-refresh": Workload(3_000, "table", refreshes=2),
+    "mta-views": Workload(1_000, "view", warmups=2, refreshes=4),
+    "mta-refresh": Workload(3_000, "table", warmups=1, refreshes=2),
 }
 OP_TIMEOUT_S = 60.0
 DRIVER_MEMORY = "2g"
@@ -256,18 +258,21 @@ def timed(errors: dict[str, str], op: str, fn) -> tuple[float, object]:
 
 
 def run_round(tr: Tracer, spark: SparkSession, wl: Workload, feed: Path, out: Path) -> dict:
+    """One cookbook pass, split into ``wl.refreshes`` slices with a refresh
+    before each. Spread over the round, the refresh samples do not all fall
+    into one burst of load from other guests on the host, which moves a
+    view refresh by up to 60 %. ``cookbook_s`` is the pass's query time,
+    refreshes excluded."""
     errors: dict[str, str] = {}
-    refreshes = [
-        timed(errors, f"refresh{k}", lambda: refresh(tr, spark, wl, feed, out))[0]
-        for k in range(wl.refreshes)
-    ]
-    queries, results = {}, {}
-    t0 = time.perf_counter()
-    for q in COOKBOOK:
-        queries[q.name], results[q.name] = timed(
-            errors, q.name, lambda q=q: query(tr, spark, wl, q, feed, out))
-    cookbook_s = time.perf_counter() - t0
-    return dict(refreshes=refreshes, cookbook_s=cookbook_s, queries=queries,
+    refreshes, queries, results = [], {}, {}
+    per = -(-len(COOKBOOK) // wl.refreshes)
+    for k in range(wl.refreshes):
+        refreshes.append(
+            timed(errors, f"refresh{k}", lambda: refresh(tr, spark, wl, feed, out))[0])
+        for q in COOKBOOK[k * per:(k + 1) * per]:
+            queries[q.name], results[q.name] = timed(
+                errors, q.name, lambda q=q: query(tr, spark, wl, q, feed, out))
+    return dict(refreshes=refreshes, cookbook_s=sum(queries.values()), queries=queries,
                 results=results, errors=errors)
 
 
@@ -316,12 +321,14 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
     rounds: list[dict] = []
     measured = 0.0
     try:
-        # Warm-up: one refresh of the measured feed. Its first run pays for
-        # reading the feed into the file cache and for compiling the source
-        # loads and the model build, which every later refresh and every
-        # query over views repeat. The metrics stay cold, as they are in a
-        # dbt invocation, which starts its own session.
-        refresh(Tracer(spark.sparkContext, False), spark, wl, feed, out)
+        # Warm-up: refreshes of the measured feed. The first pays for reading
+        # the feed into the file cache; all of them compile the source loads
+        # and the model build, which every later refresh and every query over
+        # views repeat. On mta-views at 4 vCPUs the refreshes of a session
+        # take 6 s, 2.1 s, then 1.4-1.6 s. The metrics stay cold, as they
+        # are in a dbt invocation, which starts its own session.
+        for _ in range(wl.warmups):
+            refresh(Tracer(spark.sparkContext, False), spark, wl, feed, out)
         setup_s = time.perf_counter() - t0
         tr = Tracer(spark.sparkContext, trace)
         while True:
