@@ -11,7 +11,8 @@ shared inputs' file listing; results are forced, not cached between runs.
 Per-entry numbers are the MEDIAN OF 3 independent reps (r5 verdict: the
 shared host's co-tenant load inflates single-shot timings ±30%, so one
 sample can't adjudicate a perf target); all raw reps ship in
-``queries_runs`` beside the medians.
+``queries_runs`` beside the medians. ``$SPARK_GRAFT_CPUS`` defaults to the
+cores this process may run on.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ import time
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     # Host-load provenance (r7 verdict item 3): the r7 artifact was ~20 %
@@ -38,7 +38,9 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
 
-    from mta_rtf_dbt_spark.session import pin_session
+    from mta_rtf_dbt_spark.session import default_parallelism, pin_session
+
+    cpus = str(default_parallelism())
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -10,7 +10,8 @@ GTFS clock strings past 24:00:00 (D10), a DST fall-back boundary
 dangling stop/route refs.
 
 Seeded ``random.Random`` only — byte-stable across runs. Output: one parquet
-per table under ``out_dir``.
+per table under ``out_dir``, written with the table's declared schema
+(:mod:`mta_rtf_dbt_spark.sources.schemas`).
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import random
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from mta_rtf_dbt_spark.sources.schemas import arrow_schema
 
 SERVICE_DAYS = ["20251101", "20251102"]  # Sat, Sun (DST fall-back on the 2nd)
 ROUTES = ["1", "2", "A", "L", "Q", "GS"]
@@ -45,7 +48,8 @@ def generate(out_dir: str, n_trips: int = 48, n_snapshots: int = 4, seed: int = 
     os.makedirs(out_dir, exist_ok=True)
     counts: dict[str, int] = {}
 
-    def write(name: str, rows: list[dict], schema: pa.schema) -> None:
+    def write(name: str, rows: list[dict]) -> None:
+        schema = arrow_schema(name)
         cols = {f.name: [r.get(f.name) for r in rows] for f in schema}
         pq.write_table(pa.table(cols, schema=schema), os.path.join(out_dir, f"{name}.parquet"))
         counts[name] = len(rows)
@@ -66,15 +70,7 @@ def generate(out_dir: str, n_trips: int = 48, n_snapshots: int = 4, seed: int = 
                 dict(stop_id=sid, stop_name=f"Station {i}", parent_station=parent,
                      stop_lat=40.5 + i * 0.01, stop_lon=-74.0 + i * 0.01)
             )
-    write(
-        "stops",
-        stops_rows,
-        pa.schema(
-            [("stop_id", pa.string()), ("stop_name", pa.string()),
-             ("parent_station", pa.string()), ("stop_lat", pa.float64()),
-             ("stop_lon", pa.float64())]
-        ),
-    )
+    write("stops", stops_rows)
 
     routes_rows = [
         dict(route_id=r, agency_id="MTA NYCT", route_short_name=r,
@@ -86,16 +82,7 @@ def generate(out_dir: str, n_trips: int = 48, n_snapshots: int = 4, seed: int = 
              route_long_name="Unused Line", route_desc=None, route_type=1,
              route_color=None, route_text_color=None)
     ]
-    write(
-        "routes",
-        routes_rows,
-        pa.schema(
-            [("route_id", pa.string()), ("agency_id", pa.string()),
-             ("route_short_name", pa.string()), ("route_long_name", pa.string()),
-             ("route_desc", pa.string()), ("route_type", pa.int64()),
-             ("route_color", pa.string()), ("route_text_color", pa.string())]
-        ),
-    )
+    write("routes", routes_rows)
 
     calendar_rows = [
         dict(service_id="WKD", monday=1, tuesday=1, wednesday=1, thursday=1,
@@ -111,16 +98,7 @@ def generate(out_dir: str, n_trips: int = 48, n_snapshots: int = 4, seed: int = 
              friday=1, saturday=1, sunday=1, start_date=dt.date(2024, 1, 1),
              end_date=dt.date(2024, 12, 31)),
     ]
-    write(
-        "calendar",
-        calendar_rows,
-        pa.schema(
-            [("service_id", pa.string())]
-            + [(d, pa.int64()) for d in
-               ("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")]
-            + [("start_date", pa.date32()), ("end_date", pa.date32())]
-        ),
-    )
+    write("calendar", calendar_rows)
 
     # Static trips + stop_times. trip_id style '086200_1..S03R' (digits first).
     trips_rows, stop_times_rows = [], []
@@ -151,24 +129,8 @@ def generate(out_dir: str, n_trips: int = 48, n_snapshots: int = 4, seed: int = 
                 dict(trip_id=trip_id, stop_id=stop_ids[(i + s * 2) % len(stop_ids)],
                      stop_sequence=s + 1, arrival_time=arr, departure_time=dep)
             )
-    write(
-        "trips",
-        trips_rows,
-        pa.schema(
-            [("trip_id", pa.string()), ("route_id", pa.string()),
-             ("service_id", pa.string()), ("trip_headsign", pa.string()),
-             ("direction_id", pa.int64())]
-        ),
-    )
-    write(
-        "stop_times",
-        stop_times_rows,
-        pa.schema(
-            [("trip_id", pa.string()), ("stop_id", pa.string()),
-             ("stop_sequence", pa.int64()), ("arrival_time", pa.string()),
-             ("departure_time", pa.string())]
-        ),
-    )
+    write("trips", trips_rows)
+    write("stop_times", stop_times_rows)
 
     # ---------------- realtime: trip_updates + stop_time_update ----------------
     tu_rows, stu_rows = [], []
@@ -239,32 +201,8 @@ def generate(out_dir: str, n_trips: int = 48, n_snapshots: int = 4, seed: int = 
                         schedule_relationship=["SCHEDULED", "SKIPPED", None][(t + s) % 3],
                     )
                 )
-    write(
-        "trip_updates",
-        tu_rows,
-        pa.schema(
-            [("_dlt_id", pa.string()), ("_dlt_load_id", pa.string()),
-             ("feed", pa.string()), ("entity_id", pa.string()),
-             ("as_of", pa.string()), ("trip_update__timestamp", pa.int64()),
-             ("trip_update__trip__trip_id", pa.string()),
-             ("trip_update__trip__route_id", pa.string()),
-             ("trip_update__trip__direction_id", pa.int64()),
-             ("trip_update__trip__start_date", pa.string()),
-             ("trip_update__trip__schedule_relationship", pa.string())]
-        ),
-    )
-    write(
-        "trip_updates__trip_update__stop_time_update",
-        stu_rows,
-        pa.schema(
-            [("_dlt_id", pa.string()), ("_dlt_parent_id", pa.string()),
-             ("stop_id", pa.string()), ("stop_sequence", pa.int64()),
-             ("arrival__time", pa.int64()), ("departure__time", pa.int64()),
-             ("arrival__delay", pa.int64()), ("departure__delay", pa.int64()),
-             ("arrival__uncertainty", pa.int64()), ("departure__uncertainty", pa.int64()),
-             ("schedule_relationship", pa.string())]
-        ),
-    )
+    write("trip_updates", tu_rows)
+    write("trip_updates__trip_update__stop_time_update", stu_rows)
 
     # ---------------- realtime: alerts + children ----------------
     al_rows, hdr_rows, desc_rows, ie_rows, ap_rows = [], [], [], [], []
@@ -307,38 +245,11 @@ def generate(out_dir: str, n_trips: int = 48, n_snapshots: int = 4, seed: int = 
                      start=start if (a + p) % 5 != 4 else None,
                      end=(start + 5400) if (a + p) % 3 != 2 else None)
             )
-    write(
-        "alerts",
-        al_rows,
-        pa.schema(
-            [("_dlt_id", pa.string()), ("_dlt_load_id", pa.string()),
-             ("feed", pa.string()), ("entity_id", pa.string()), ("as_of", pa.string())]
-        ),
-    )
-    tr_schema = pa.schema(
-        [("_dlt_id", pa.string()), ("_dlt_parent_id", pa.string()),
-         ("text", pa.string()), ("language", pa.string())]
-    )
-    write("alerts__alert__header_text__translation", hdr_rows, tr_schema)
-    write("alerts__alert__description_text__translation", desc_rows, tr_schema)
-    write(
-        "alerts__alert__informed_entity",
-        ie_rows,
-        pa.schema(
-            [("_dlt_id", pa.string()), ("_dlt_parent_id", pa.string()),
-             ("agency_id", pa.string()), ("route_id", pa.string()),
-             ("stop_id", pa.string()), ("trip__trip_id", pa.string()),
-             ("trip__route_id", pa.string()), ("trip__direction_id", pa.int64())]
-        ),
-    )
-    write(
-        "alerts__alert__active_period",
-        ap_rows,
-        pa.schema(
-            [("_dlt_id", pa.string()), ("_dlt_parent_id", pa.string()),
-             ("start", pa.int64()), ("end", pa.int64())]
-        ),
-    )
+    write("alerts", al_rows)
+    write("alerts__alert__header_text__translation", hdr_rows)
+    write("alerts__alert__description_text__translation", desc_rows)
+    write("alerts__alert__informed_entity", ie_rows)
+    write("alerts__alert__active_period", ap_rows)
     return counts
 
 

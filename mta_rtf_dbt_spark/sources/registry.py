@@ -10,9 +10,17 @@ Two families of sources:
 - **MTA-shaped fixtures** (FIXTURES.md): generated deterministically by
   :mod:`mta_rtf_dbt_spark.sources.fixtures`, same registry mechanics.
 
-Scale posture: a registered source is just ``spark.read.parquet(path)`` — on a
-cluster the same registry points at partitioned directories and Catalyst gets
-partition pruning + predicate pushdown for free; nothing here materializes.
+Every source of both families is declared in
+:mod:`mta_rtf_dbt_spark.sources.schemas` (``SCHEMAS``), so a load is
+``spark.read.schema(SCHEMAS[name]).parquet(path)``: no schema-inference job
+runs. Before the first read of a file, a driver-side footer check compares it
+with the declaration and raises ``SchemaDriftError`` naming the column that
+went missing, appeared or changed type. Paths that are not declared (tables
+the engine wrote itself) are read with inference.
+
+Scale posture: on a cluster the same registry points at partitioned
+directories and Catalyst gets partition pruning + predicate pushdown for free;
+nothing here materializes.
 """
 
 from __future__ import annotations
@@ -23,6 +31,8 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mta_rtf_dbt_spark.sources.schemas import SCHEMAS, declared_schema
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -60,12 +70,22 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one source table (no action triggered — stays a lazy scan).
 
-    TIMESTAMP(NANOS) columns (e.g. ``events.ts``) are read as long nanos via
+    A declared source is read with its declared schema, after the footer
+    drift check. Anything else goes through :func:`_inferred`."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name in SCHEMAS:
+        return spark.read.schema(declared_schema(path, name)).parquet(path)
+    return _inferred(spark, path)
+
+
+def _inferred(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet path with Spark's schema inference (one job).
+
+    TIMESTAMP(NANOS) columns are read as long nanos via
     ``spark.sql.legacy.parquet.nanosAsLong`` and truncated to micros with
     exact integer division (``div`` — nanos exceed 2^53, float math would
     corrupt them), matching DuckDB's nanos->micros truncation.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols = _nanos_timestamp_cols(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -7,8 +7,8 @@ tumbling buckets as date_trunc math at :30,46; no watermarks, late data never
 dropped). This module is the native-streaming re-expression of those shapes:
 
 - ``stream_source``          — file-based ``readStream`` over the same parquet
-                               the batch registry reads (schema locked from the
-                               footer; TIMESTAMP(NANOS) handled identically).
+                               the batch registry reads, with the same declared
+                               schema and footer drift check.
 - ``first_observation``      — W2 snapshot-dedup as streaming
                                ``dropDuplicates`` (first row per key wins).
 - ``windowed_actor_counts``  — M1/M2 tumbling-window distinct-actor counts as
@@ -42,6 +42,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mta_rtf_dbt_spark.sources.schemas import declared_schema
+
 
 def stream_source(
     spark: SparkSession,
@@ -51,36 +53,20 @@ def stream_source(
 ) -> DataFrame:
     """``readStream`` over the same parquet the batch registry serves.
 
-    The schema is locked driver-side from the parquet footer (streaming
-    sources require an explicit schema — no inference race at 100 TB), and
-    TIMESTAMP(NANOS) columns get the registry's exact long-nanos → micros
-    conversion so batch and stream agree to the microsecond.
+    Streaming sources require an explicit schema; this one is the source's
+    declaration (``sources.schemas.SCHEMAS``), checked against the file's
+    footer exactly as the batch registry checks it, so batch and stream
+    agree column for column and a drifted file fails here too.
     """
-    from mta_rtf_dbt_spark.sources.registry import _nanos_timestamp_cols
-
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema  # footer read only, no action
     # The file source only accepts directories/globs, not a bare file path;
     # a one-character glob class makes the exact filename a valid pattern.
     # (On a cluster this points at a partitioned directory instead.)
     glob_path = path[:-1] + f"[{path[-1]}]"
-    reader = spark.readStream.schema(raw_schema)
+    reader = spark.readStream.schema(declared_schema(path, name))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(glob_path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    # Same NTZ guard as the batch registry: watermarks reject TIMESTAMP_NTZ,
-    # and the session tz is pinned UTC so the cast is value-preserving.
-    from pyspark.sql.types import TimestampNTZType
-
-    for field in df.schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return df
+    return reader.parquet(glob_path)
 
 
 def first_observation(

@@ -19,7 +19,6 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     out_dir = os.path.join(repo, "plans", "r12")
@@ -27,7 +26,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from mta_rtf_dbt_spark.session import pin_session
+    from mta_rtf_dbt_spark.session import default_parallelism, pin_session
+
+    cpus = str(default_parallelism())
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
