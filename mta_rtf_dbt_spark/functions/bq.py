@@ -1,10 +1,14 @@
 """BigQuery-semantics expression library (the D1-D11 compat layer, SURVEY.md §4).
 
-Every model/metric in :mod:`mta_rtf_dbt_spark.plans` and
-:mod:`mta_rtf_dbt_spark.metrics` builds on these helpers instead of raw
-``pyspark.sql.functions`` wherever BigQuery and Spark semantics diverge. All
-helpers return Column expressions (JVM-side, whole-stage-codegen eligible) —
-no Python UDFs anywhere in this module.
+The entries built with the DataFrame API (plans/relational.py,
+metrics/events_analog.py, streaming/jobs.py) use these helpers instead of
+raw ``pyspark.sql.functions`` wherever BigQuery and Spark semantics diverge.
+The MTA models and metrics cookbook are Spark SQL text and spell the same
+semantics in SQL under the same D-codes (plans/mta_models.py,
+metrics/guide.py); tests/test_bq_properties.py checks their D9 spelling
+against :func:`timestamp_diff`. All helpers return Column expressions
+(JVM-side, whole-stage-codegen eligible) — no Python UDFs anywhere in this
+module.
 
 Reference call sites are cited per function as ``file:line`` inside
 ``/root/reference``.
@@ -16,7 +20,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
-    "safe_cast",
     "regexp_extract",
     "concat",
     "to_hex_sha256",
@@ -26,26 +29,13 @@ __all__ = [
     "unix_seconds",
     "safe_divide",
     "countif",
-    "rate",
-    "local_dt",
     "local_date",
     "local_time_str",
     "gtfs_time_to_ts",
     "any_value_det",
     "argmin",
     "argmax",
-    "trip_uid",
 ]
-
-
-def safe_cast(col: Column | str, dtype: str) -> Column:
-    """BigQuery ``SAFE_CAST(x AS T)`` — NULL on failure, never an error.
-
-    D1; reference: fact_trips_stops.sql:68,75-77, fact_alerts.sql:29-30.
-    Spark's ``try_cast`` has identical semantics independent of ANSI mode.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast(dtype)
 
 
 def regexp_extract(col: Column | str, pattern: str, idx: int = 0) -> Column:
@@ -129,20 +119,6 @@ def countif(cond: Column) -> Column:
     return F.count_if(cond)
 
 
-def rate(cond: Column) -> Column:
-    """The reference's ``AVG(CASE WHEN cond THEN 1 ELSE 0 END)`` percent-rate
-    idiom (A8; metrics_guide.md:157,302-303,371). NULL rows count as 0 only
-    when the reference's CASE has an ELSE — which it always does."""
-    return F.avg(F.when(cond, F.lit(1)).otherwise(F.lit(0)))
-
-
-def local_dt(ts: Column, tz: str = "America/New_York") -> Column:
-    """BigQuery ``DATETIME(ts, tz)`` — zoneless civil time. With the session
-    pinned to UTC, ``from_utc_timestamp`` renders as the same civil instant
-    (D11; fact_trips_stops.sql:134)."""
-    return F.from_utc_timestamp(ts, tz)
-
-
 def local_date(ts: Column, tz: str = "America/New_York") -> Column:
     """BigQuery ``DATE(ts, tz)`` (F11; fact_trips_stops.sql:135)."""
     return F.to_date(F.from_utc_timestamp(ts, tz))
@@ -203,32 +179,3 @@ def argmax(payload: Column, key: Column, *tiebreak: Column) -> Column:
     fields = [F.when(key.isNull(), F.lit(-1)).otherwise(F.lit(0)).alias("n"), key.alias("k")]
     fields += [t.alias(f"t{i}") for i, t in enumerate(tiebreak)]
     return F.max_by(payload, F.struct(*fields))
-
-
-def trip_uid(
-    service_date: Column,
-    route_id: Column,
-    headsign: Column,
-    origin_code: Column,
-) -> Column:
-    """The reference's stable trip identity across feed snapshots
-    (fact_trips_stops.sql:93,96-117):
-
-        to_hex(sha256(coalesce(service_date,'UNK') | coalesce(route,'UNK') |
-                      coalesce(headsign,'UNK') | coalesce(origin,'UNK')))
-
-    with origin_code = REGEXP_EXTRACT(rt_trip_id, r'^-?\\d{1,8}') (NULL on
-    no-match — use :func:`regexp_extract` to produce it, D2).
-    """
-    unk = F.lit("UNK")
-    return to_hex_sha256(
-        concat(
-            F.coalesce(service_date, unk),
-            F.lit("|"),
-            F.coalesce(route_id, unk),
-            F.lit("|"),
-            F.coalesce(headsign, unk),
-            F.lit("|"),
-            F.coalesce(origin_code, unk),
-        )
-    )

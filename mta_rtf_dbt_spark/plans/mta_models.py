@@ -1,4 +1,4 @@
-"""The four reference models as DataFrame builders + a dbt-style DAG.
+"""The four reference models as Spark SQL text + a dbt-style DAG.
 
 Source semantics (reference, cited per builder):
   - fact_trips_stops — /root/reference/models/fact_trips_stops.sql:1-137
@@ -6,15 +6,35 @@ Source semantics (reference, cited per builder):
   - fact_delays      — /root/reference/models/fact_delays.sql:1-54
   - fact_alerts      — /root/reference/models/fact_alerts.sql:1-94
 
-Determinism policy (SURVEY.md §4 D4/D5, applied consistently in the DuckDB
-oracles in tests/mta_oracle_sql.py):
-  - BigQuery ``ANY_VALUE`` (nondeterministic, ignores NULLs) is implemented
-    as ``MIN`` (deterministic, ignores NULLs).
-  - Every argmin/argmax gets a trailing unique ``stu_id`` tiebreaker.
+Each model body is one SQL text, run as one ``spark.sql`` call on its input
+frames' session through ``session.frame_sql``: the input frames are passed
+as ``{name}`` DataFrame arguments, so a model reads whatever frames it is
+given (sources, a filtered load, a streaming micro-batch). The reference's
+models are SQL, and a SQL body is parsed and resolved by the JVM in one
+pass: the same chain built through the DataFrame API sent ~4 000
+Python→JVM calls per ``build_all`` (each ``F.*`` or DataFrame call is
+several py4j round trips), and that plan building, not execution, was the
+largest cost of a query over the model views. Literal braces in the SQL
+(regex quantifiers) are doubled, as for ``str.format``. Model bodies nest
+subqueries rather than use WITH: a persisted model whose plan holds a CTE
+no longer matches its cache entry once a query's own CTE embeds it, and
+the metrics' CTEs would then recompute the model instead of reading it.
+
+Determinism policy (SURVEY.md §4; the independent DuckDB oracle in
+plans/mta_oracle.py applies the same policy), cited in the SQL as D-codes:
+  - D1: SAFE_CAST is ``try_cast`` (NULL on failure in any ANSI mode).
+  - D2: REGEXP_EXTRACT is NULL on no match: ``nullif(regexp_extract(..), '')``.
+  - D4: BigQuery ``ANY_VALUE`` (nondeterministic) is ``MIN``.
+  - D5: every argmin/argmax key ends in the unique ``stu_id`` tiebreaker.
+  - D9: TIMESTAMP_DIFF is exact unix-micros arithmetic with ``div``, which
+    truncates toward zero (-90 s is -1 MINUTE). Spark's ``timestampdiff``
+    is not used: it subtracts wall-clock times in the session time zone,
+    so across a DST change in a non-UTC session it is off by the shift.
+  - D11: civil time is an explicit ``from_utc_timestamp(ts, tz)`` shift.
 BigQuery default null ordering is replicated exactly where the reference
 relies on it: ASC → NULLS FIRST, DESC → NULLS LAST, and the explicit
 CASE-WHEN-null prefix (fact_trips.sql:44-47,52-55) forces nulls-last for the
-terminal-stop argmin/argmax.
+terminal-stop argmin/argmax — as null-flag fields leading a struct key.
 
 Scale posture: fact_trips_stops is one fact-fact shuffle join (tu×stu on
 tu_id) plus two broadcast dim joins; fact_trips is a single hash aggregate on
@@ -30,357 +50,260 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from mta_rtf_dbt_spark.functions import bq
-
-ORIGIN_RE = r"^-?\d{1,8}"
-
+from mta_rtf_dbt_spark.session import frame_sql
 
 # ---------------------------------------------------------------------------
 # fact_trips_stops
 # ---------------------------------------------------------------------------
+FACT_TRIPS_STOPS_SQL = r"""
+SELECT
+  tu_id, stu_id, as_of, feed, rt_trip_id, route_id, direction_id, service_date,
+  trip_schedule_relationship, trip_headsign, stop_id, stop_sequence, stop_sequence_int,
+  stop_name, parent_station, stop_lat, stop_lon,
+  feed_ts_utc, arrival_ts_utc, departure_ts_utc,
+  arrival__delay, departure__delay, arrival__uncertainty, departure__uncertainty,
+  stu_schedule_relationship,
+  concat(coalesce(route_id, 'UNK'), '|', coalesce(trip_headsign, 'UNK')) AS route_headsign_key,
+  rt_origin_code_hundredths,
+  trip_uid_text,
+  sha2(trip_uid_text, 256) AS trip_uid,  -- TO_HEX(SHA256(..)): same lowercase hex
+  arrival_ts_utc IS NOT NULL AS has_arrival_ts,
+  departure_ts_utc IS NOT NULL AS has_departure_ts,
+  event_ts_utc,
+  CASE WHEN arrival_ts_utc IS NOT NULL THEN 'arrival'
+       WHEN departure_ts_utc IS NOT NULL THEN 'departure' END AS event_kind_primary,
+  -- D11: DATETIME(ts, tz) / DATE(ts, tz) (fact_trips_stops.sql:134-135)
+  from_utc_timestamp(event_ts_utc, 'America/New_York') AS event_dt_local,
+  to_date(from_utc_timestamp(event_ts_utc, 'America/New_York')) AS service_day_local
+FROM (
+  SELECT *,
+    -- the trip identity (fact_trips_stops.sql:96-117); concat is NULL if
+    -- any argument is (D3), so every part is coalesced first
+    concat(coalesce(service_date, 'UNK'), '|', coalesce(route_id, 'UNK'), '|',
+           coalesce(trip_headsign, 'UNK'), '|',
+           coalesce(rt_origin_code_hundredths, rt_trip_id, 'UNK')) AS trip_uid_text,
+    coalesce(arrival_ts_utc, departure_ts_utc) AS event_ts_utc
+  FROM (
+    SELECT /*+ BROADCAST(s, t) */
+      tu._dlt_id AS tu_id,
+      stu._dlt_id AS stu_id,
+      tu.as_of,
+      tu.feed,
+      tu.trip_update__trip__trip_id AS rt_trip_id,
+      tu.trip_update__trip__route_id AS route_id,
+      tu.trip_update__trip__direction_id AS direction_id,
+      tu.trip_update__trip__start_date AS service_date,
+      tu.trip_update__trip__schedule_relationship AS trip_schedule_relationship,
+      t.trip_headsign,
+      stu.stop_id,
+      stu.stop_sequence,
+      try_cast(stu.stop_sequence AS BIGINT) AS stop_sequence_int,  -- D1
+      s.stop_name,
+      s.parent_station,
+      s.stop_lat,
+      s.stop_lon,
+      timestamp_seconds(try_cast(tu.trip_update__timestamp AS BIGINT)) AS feed_ts_utc,
+      CASE WHEN stu.arrival__time IS NOT NULL
+        THEN timestamp_seconds(try_cast(stu.arrival__time AS BIGINT)) END AS arrival_ts_utc,
+      CASE WHEN stu.departure__time IS NOT NULL
+        THEN timestamp_seconds(try_cast(stu.departure__time AS BIGINT)) END AS departure_ts_utc,
+      stu.arrival__delay,
+      stu.departure__delay,
+      stu.arrival__uncertainty,
+      stu.departure__uncertainty,
+      stu.schedule_relationship AS stu_schedule_relationship,
+      -- D2 (fact_trips_stops.sql:93): the origin code of the realtime trip id
+      nullif(regexp_extract(tu.trip_update__trip__trip_id, r'^-?\d{{1,8}}', 0), '')
+        AS rt_origin_code_hundredths
+    FROM {tu} tu
+    JOIN {stu} stu ON stu._dlt_parent_id = tu._dlt_id
+    LEFT JOIN {stops} s ON s.stop_id = stu.stop_id
+    LEFT JOIN {trips} t ON t.trip_id = tu.trip_update__trip__trip_id
+  ) joined
+) keyed
+"""
+
+
 def fact_trips_stops(src: dict[str, DataFrame]) -> DataFrame:
     """Stop-level fact: one row per stop_time_update per snapshot
     (fact_trips_stops.sql:3-136)."""
-    tu = src["trip_updates"].select(
-        F.col("_dlt_id").alias("tu_id"),
-        "as_of",
-        "feed",
-        "trip_update__timestamp",
-        F.col("trip_update__trip__trip_id").alias("rt_trip_id"),
-        F.col("trip_update__trip__route_id").alias("route_id"),
-        F.col("trip_update__trip__direction_id").alias("direction_id"),
-        F.col("trip_update__trip__start_date").alias("service_date"),
-        F.col("trip_update__trip__schedule_relationship").alias("trip_schedule_relationship"),
-    )
-    stu = src["trip_updates__trip_update__stop_time_update"].select(
-        F.col("_dlt_id").alias("stu_id"),
-        F.col("_dlt_parent_id").alias("tu_id"),
-        "stop_id",
-        "stop_sequence",
-        "arrival__time",
-        "departure__time",
-        "arrival__delay",
-        "departure__delay",
-        "arrival__uncertainty",
-        "departure__uncertainty",
-        F.col("schedule_relationship").alias("stu_schedule_relationship"),
-    )
-    stops = src["stops"].select("stop_id", "stop_name", "parent_station", "stop_lat", "stop_lon")
-    static_trips = src["trips"].select(
-        "trip_id",
-        F.col("route_id").alias("static_route_id"),
-        "service_id",
-        "trip_headsign",
-        F.col("direction_id").alias("static_direction_id"),
-    )
-
-    origin = bq.regexp_extract(F.col("rt_trip_id"), ORIGIN_RE)
-    uid_origin = F.coalesce(origin, F.col("rt_trip_id"), F.lit("UNK"))
-    uid_text = bq.concat(
-        F.coalesce(F.col("service_date"), F.lit("UNK")),
-        F.lit("|"),
-        F.coalesce(F.col("route_id"), F.lit("UNK")),
-        F.lit("|"),
-        F.coalesce(F.col("trip_headsign"), F.lit("UNK")),
-        F.lit("|"),
-        uid_origin,
-    )
-    arr_ts = F.when(
-        F.col("arrival__time").isNotNull(),
-        bq.timestamp_seconds(bq.safe_cast(F.col("arrival__time"), "long")),
-    )
-    dep_ts = F.when(
-        F.col("departure__time").isNotNull(),
-        bq.timestamp_seconds(bq.safe_cast(F.col("departure__time"), "long")),
-    )
-    evt = F.coalesce(F.col("arrival_ts_utc"), F.col("departure_ts_utc"))
-
-    base = (
-        tu.join(stu, "tu_id", "inner")
-        .join(F.broadcast(stops), "stop_id", "left")
-        .join(
-            F.broadcast(static_trips),
-            F.col("trip_id") == F.col("rt_trip_id"),
-            "left",
-        )
-        .select(
-            "tu_id",
-            "stu_id",
-            "as_of",
-            "feed",
-            "rt_trip_id",
-            "route_id",
-            "direction_id",
-            "service_date",
-            "trip_schedule_relationship",
-            "trip_headsign",
-            "stop_id",
-            "stop_sequence",
-            bq.safe_cast(F.col("stop_sequence"), "long").alias("stop_sequence_int"),
-            "stop_name",
-            "parent_station",
-            "stop_lat",
-            "stop_lon",
-            bq.timestamp_seconds(
-                bq.safe_cast(F.col("trip_update__timestamp"), "long")
-            ).alias("feed_ts_utc"),
-            arr_ts.alias("arrival_ts_utc"),
-            dep_ts.alias("departure_ts_utc"),
-            "arrival__delay",
-            "departure__delay",
-            "arrival__uncertainty",
-            "departure__uncertainty",
-            "stu_schedule_relationship",
-            bq.concat(
-                F.coalesce(F.col("route_id"), F.lit("UNK")),
-                F.lit("|"),
-                F.coalesce(F.col("trip_headsign"), F.lit("UNK")),
-            ).alias("route_headsign_key"),
-            origin.alias("rt_origin_code_hundredths"),
-            uid_text.alias("trip_uid_text"),
-            bq.to_hex_sha256(uid_text).alias("trip_uid"),
-        )
-    )
-    return base.select(
-        "*",
-        F.col("arrival_ts_utc").isNotNull().alias("has_arrival_ts"),
-        F.col("departure_ts_utc").isNotNull().alias("has_departure_ts"),
-        evt.alias("event_ts_utc"),
-        F.when(F.col("arrival_ts_utc").isNotNull(), "arrival")
-        .when(F.col("departure_ts_utc").isNotNull(), "departure")
-        .alias("event_kind_primary"),
-        bq.local_dt(evt).alias("event_dt_local"),
-        bq.local_date(evt).alias("service_day_local"),
+    return frame_sql(
+        FACT_TRIPS_STOPS_SQL,
+        tu=src["trip_updates"],
+        stu=src["trip_updates__trip_update__stop_time_update"],
+        stops=src["stops"],
+        trips=src["trips"],
     )
 
 
 # ---------------------------------------------------------------------------
 # fact_trips
 # ---------------------------------------------------------------------------
-def _flag_asc_nulls_first(c: F.Column) -> F.Column:
-    # BQ ASC default: NULLS FIRST — null key must WIN a min_by.
-    return F.when(c.isNull(), F.lit(0)).otherwise(F.lit(1))
-
-
-def _flag_asc_nulls_last(c: F.Column) -> F.Column:
-    # The reference's CASE WHEN k IS NULL THEN 1 ELSE 0 prefix.
-    return F.when(c.isNull(), F.lit(1)).otherwise(F.lit(0))
-
-
-def _flag_desc_nulls_last(c: F.Column) -> F.Column:
-    # BQ DESC default: NULLS LAST — null key must LOSE a max_by.
-    return F.when(c.isNull(), F.lit(-1)).otherwise(F.lit(0))
+# The reference's ordered-ARRAY_AGG-LIMIT-1 idioms (fact_trips.sql:42-68)
+# become min_by/max_by over struct keys. Struct order is lexicographic, so a
+# null-flag field ahead of each nullable key places its NULLs, and stu_id
+# ends every key (D5):
+#   - first/last stop: the reference's CASE WHEN seq IS NULL THEN 1 ELSE 0
+#     prefix (nulls last for both), then the event time in BigQuery's
+#     default order (ASC nulls first; DESC nulls last: under max_by a null
+#     flag of -1 loses to 0);
+#   - first/last event: BigQuery's *default* null order on seq alone (ASC
+#     nulls first / DESC nulls last), since the reference omits the CASE
+#     prefix there — a faithful quirk.
+FACT_TRIPS_SQL = """
+SELECT /*+ BROADCAST(fs, ls) */
+  agg.*,
+  fs.stop_name AS first_stop_name,
+  fs.parent_station AS first_parent_station,
+  fs.stop_lat AS first_stop_lat,
+  fs.stop_lon AS first_stop_lon,
+  ls.stop_name AS last_stop_name,
+  ls.parent_station AS last_parent_station,
+  ls.stop_lat AS last_stop_lat,
+  ls.stop_lon AS last_stop_lon
+FROM (
+  SELECT
+    trip_uid,
+    min(trip_uid_text) AS trip_uid_text,  -- D4: ANY_VALUE is MIN
+    min(rt_trip_id) AS rt_trip_id,
+    min(route_id) AS route_id,
+    min(direction_id) AS direction_id,
+    min(trip_headsign) AS trip_headsign,
+    min(service_date) AS service_date,
+    min(rt_origin_code_hundredths) AS rt_origin_code_hundredths,
+    min(feed_ts_utc) AS first_feed_ts_utc,
+    max(feed_ts_utc) AS last_feed_ts_utc,
+    min(as_of) AS first_ingest_ts,
+    max(as_of) AS last_ingest_ts,
+    min_by(stop_id, first_stop_key) AS first_stop_id,
+    max_by(stop_id, last_stop_key) AS last_stop_id,
+    min(stop_sequence_int) AS first_stop_sequence,
+    max(stop_sequence_int) AS last_stop_sequence,
+    min_by(event_ts_utc, first_event_key) AS first_event_ts_utc,
+    max_by(event_ts_utc, last_event_key) AS last_event_ts_utc,
+    -- D9 (fact_trips.sql:66-70)
+    (unix_micros(max_by(event_ts_utc, last_event_key))
+      - unix_micros(min_by(event_ts_utc, first_event_key))) div 1000000 AS trip_duration_s,
+    min(trip_schedule_relationship) AS schedule_relationship  -- D4
+  FROM (
+    SELECT *,
+      struct(CASE WHEN stop_sequence_int IS NULL THEN 1 ELSE 0 END AS f0,
+             coalesce(stop_sequence_int, 0) AS k1,
+             CASE WHEN event_ts_utc IS NULL THEN 0 ELSE 1 END AS f1,
+             coalesce(event_ts_utc, CAST('1970-01-01' AS TIMESTAMP)) AS k2,
+             stu_id AS tb) AS first_stop_key,
+      struct(CASE WHEN stop_sequence_int IS NULL THEN -1 ELSE 0 END AS f0,
+             coalesce(stop_sequence_int, 0) AS k1,
+             CASE WHEN event_ts_utc IS NULL THEN -1 ELSE 0 END AS f1,
+             coalesce(event_ts_utc, CAST('1970-01-01' AS TIMESTAMP)) AS k2,
+             stu_id AS tb) AS last_stop_key,
+      struct(CASE WHEN stop_sequence_int IS NULL THEN 0 ELSE 1 END AS f0,
+             coalesce(stop_sequence_int, 0) AS k1,
+             stu_id AS tb) AS first_event_key,
+      struct(CASE WHEN stop_sequence_int IS NULL THEN -1 ELSE 0 END AS f0,
+             coalesce(stop_sequence_int, 0) AS k1,
+             stu_id AS tb) AS last_event_key
+    FROM {fts}
+  ) keyed
+  GROUP BY trip_uid
+) agg
+LEFT JOIN {stops} fs ON fs.stop_id = agg.first_stop_id
+LEFT JOIN {stops} ls ON ls.stop_id = agg.last_stop_id
+"""
 
 
 def fact_trips(src: dict[str, DataFrame]) -> DataFrame:
-    """Trip-level rollup: one row per trip_uid (fact_trips.sql:3-89).
-
-    The reference's ordered-ARRAY_AGG-LIMIT-1 idioms (fact_trips.sql:42-68)
-    become min_by/max_by over explicit null-flagged struct keys; every key
-    carries the stu_id tiebreaker (D5). first/last_event_ts use BigQuery
-    *default* null ordering (seq ASC nulls first / DESC nulls last) because
-    the reference omits the CASE prefix there — a faithful quirk.
-    """
-    fts = src["fact_trips_stops"]
-    seq = F.col("stop_sequence_int")
-    evt = F.col("event_ts_utc")
-    sid = F.col("stu_id")
-
-    first_stop_key = F.struct(
-        _flag_asc_nulls_last(seq).alias("f0"),
-        F.coalesce(seq, F.lit(0)).alias("k1"),
-        _flag_asc_nulls_first(evt).alias("f1"),
-        F.coalesce(evt, F.lit("1970-01-01").cast("timestamp")).alias("k2"),
-        sid.alias("tb"),
-    )
-    last_stop_key = F.struct(
-        # ORDER BY flag ASC, seq DESC, evt DESC under a max_by: non-null flag
-        # (0) beats null flag (-1); then larger seq/evt wins; nulls lose.
-        _flag_desc_nulls_last(seq).alias("f0"),
-        F.coalesce(seq, F.lit(0)).alias("k1"),
-        _flag_desc_nulls_last(evt).alias("f1"),
-        F.coalesce(evt, F.lit("1970-01-01").cast("timestamp")).alias("k2"),
-        sid.alias("tb"),
-    )
-    first_evt_key = F.struct(
-        _flag_asc_nulls_first(seq).alias("f0"),
-        F.coalesce(seq, F.lit(0)).alias("k1"),
-        sid.alias("tb"),
-    )
-    last_evt_key = F.struct(
-        _flag_desc_nulls_last(seq).alias("f0"),
-        F.coalesce(seq, F.lit(0)).alias("k1"),
-        sid.alias("tb"),
-    )
-    first_event = F.min_by(evt, first_evt_key)
-    last_event = F.max_by(evt, last_evt_key)
-
-    agg = fts.groupBy("trip_uid").agg(
-        bq.any_value_det(F.col("trip_uid_text")).alias("trip_uid_text"),
-        bq.any_value_det(F.col("rt_trip_id")).alias("rt_trip_id"),
-        bq.any_value_det(F.col("route_id")).alias("route_id"),
-        bq.any_value_det(F.col("direction_id")).alias("direction_id"),
-        bq.any_value_det(F.col("trip_headsign")).alias("trip_headsign"),
-        bq.any_value_det(F.col("service_date")).alias("service_date"),
-        bq.any_value_det(F.col("rt_origin_code_hundredths")).alias("rt_origin_code_hundredths"),
-        F.min("feed_ts_utc").alias("first_feed_ts_utc"),
-        F.max("feed_ts_utc").alias("last_feed_ts_utc"),
-        F.min("as_of").alias("first_ingest_ts"),
-        F.max("as_of").alias("last_ingest_ts"),
-        F.min_by(F.col("stop_id"), first_stop_key).alias("first_stop_id"),
-        F.max_by(F.col("stop_id"), last_stop_key).alias("last_stop_id"),
-        F.min(seq).alias("first_stop_sequence"),
-        F.max(seq).alias("last_stop_sequence"),
-        first_event.alias("first_event_ts_utc"),
-        last_event.alias("last_event_ts_utc"),
-        bq.timestamp_diff(last_event, first_event, "SECOND").alias("trip_duration_s"),
-        bq.any_value_det(F.col("trip_schedule_relationship")).alias("schedule_relationship"),
-    )
-
-    stops = src["stops"].select("stop_id", "stop_name", "parent_station", "stop_lat", "stop_lon")
-    fs = F.broadcast(stops).alias("fs")
-    ls = F.broadcast(stops).alias("ls")
-    return (
-        agg.join(fs, agg.first_stop_id == F.col("fs.stop_id"), "left")
-        .join(ls, agg.last_stop_id == F.col("ls.stop_id"), "left")
-        .select(
-            agg["*"],
-            F.col("fs.stop_name").alias("first_stop_name"),
-            F.col("fs.parent_station").alias("first_parent_station"),
-            F.col("fs.stop_lat").alias("first_stop_lat"),
-            F.col("fs.stop_lon").alias("first_stop_lon"),
-            F.col("ls.stop_name").alias("last_stop_name"),
-            F.col("ls.parent_station").alias("last_parent_station"),
-            F.col("ls.stop_lat").alias("last_stop_lat"),
-            F.col("ls.stop_lon").alias("last_stop_lon"),
-        )
-    )
+    """Trip-level rollup: one row per trip_uid (fact_trips.sql:3-89)."""
+    return frame_sql(FACT_TRIPS_SQL, fts=src["fact_trips_stops"], stops=src["stops"])
 
 
 # ---------------------------------------------------------------------------
 # fact_delays
 # ---------------------------------------------------------------------------
-_FACT_DELAYS_COLS = [
-    "trip_uid", "trip_uid_text", "tu_id", "stu_id", "as_of", "feed",
-    "rt_trip_id", "route_id", "direction_id", "service_date",
-    "trip_schedule_relationship", "trip_headsign",
-    "stop_id", "stop_name", "parent_station", "stop_lat", "stop_lon",
-    "stop_sequence", "stop_sequence_int",
-    "feed_ts_utc", "arrival_ts_utc", "departure_ts_utc", "event_ts_utc",
-    "event_kind_primary", "event_dt_local", "service_day_local",
-    "arrival__delay", "departure__delay",
-    "arrival__uncertainty", "departure__uncertainty", "stu_schedule_relationship",
-    "route_headsign_key", "rt_origin_code_hundredths",
-    "has_arrival_ts", "has_departure_ts",
-]
+FACT_DELAYS_SQL = """
+SELECT
+  trip_uid, trip_uid_text, tu_id, stu_id, as_of, feed,
+  rt_trip_id, route_id, direction_id, service_date,
+  trip_schedule_relationship, trip_headsign,
+  stop_id, stop_name, parent_station, stop_lat, stop_lon,
+  stop_sequence, stop_sequence_int,
+  feed_ts_utc, arrival_ts_utc, departure_ts_utc, event_ts_utc,
+  event_kind_primary, event_dt_local, service_day_local,
+  arrival__delay, departure__delay,
+  arrival__uncertainty, departure__uncertainty, stu_schedule_relationship,
+  route_headsign_key, rt_origin_code_hundredths,
+  has_arrival_ts, has_departure_ts
+FROM {fts}
+WHERE feed = 'main' AND (arrival__delay IS NOT NULL OR departure__delay IS NOT NULL)
+"""
 
 
 def fact_delays(src: dict[str, DataFrame]) -> DataFrame:
     """Stop-level delays, main feed only (fact_delays.sql:4-55). The
     feed='main' predicate pushes through the view into the trip_updates scan
     (verify with .explain — PushedFilters)."""
-    return (
-        src["fact_trips_stops"]
-        .filter(
-            (F.col("feed") == "main")
-            & (F.col("arrival__delay").isNotNull() | F.col("departure__delay").isNotNull())
-        )
-        .select(*_FACT_DELAYS_COLS)
-    )
+    return frame_sql(FACT_DELAYS_SQL, fts=src["fact_trips_stops"])
 
 
 # ---------------------------------------------------------------------------
 # fact_alerts
 # ---------------------------------------------------------------------------
+FACT_ALERTS_SQL = """
+SELECT /*+ BROADCAST(hdr, dsc, ap, i, s, r) */
+  b.feed, b.entity_id, b.as_of, b.alert_id,
+  hdr.header_text, dsc.description_text,
+  ap.first_start_ts_utc, ap.last_end_ts_utc,
+  i.route_id,
+  r.route_short_name, r.route_long_name, r.route_type, r.route_color,
+  r.route_text_color, r.route_desc, r.agency_id,
+  s.stop_name, s.parent_station, s.stop_lat, s.stop_lon
+FROM (
+  SELECT feed, entity_id, as_of, _dlt_id AS alert_id, _dlt_load_id
+  FROM {alerts}
+  WHERE feed = 'alerts'
+) b
+LEFT JOIN (
+  SELECT _dlt_parent_id AS alert_id, min(text) AS header_text  -- D4
+  FROM {header} GROUP BY _dlt_parent_id
+) hdr ON hdr.alert_id = b.alert_id
+LEFT JOIN (
+  SELECT _dlt_parent_id AS alert_id, min(text) AS description_text  -- D4
+  FROM {description} GROUP BY _dlt_parent_id
+) dsc ON dsc.alert_id = b.alert_id
+LEFT JOIN (
+  SELECT _dlt_parent_id AS alert_id,
+    min(CASE WHEN `start` IS NOT NULL
+          THEN timestamp_seconds(try_cast(`start` AS BIGINT)) END) AS first_start_ts_utc,  -- D1
+    max(CASE WHEN `end` IS NOT NULL
+          THEN timestamp_seconds(try_cast(`end` AS BIGINT)) END) AS last_end_ts_utc
+  FROM {active_period} GROUP BY _dlt_parent_id
+) ap ON ap.alert_id = b.alert_id
+LEFT JOIN (
+  SELECT _dlt_parent_id AS alert_id,  -- D4 on every attribute
+    min(coalesce(trip__route_id, route_id)) AS route_id,
+    min(trip__trip_id) AS rt_trip_id,
+    min(stop_id) AS stop_id,
+    min(agency_id) AS agency_id
+  FROM {informed_entity} GROUP BY _dlt_parent_id
+) i ON i.alert_id = b.alert_id
+LEFT JOIN {stops} s ON s.stop_id = i.stop_id
+LEFT JOIN {routes} r ON r.route_id = i.route_id
+"""
+
+
 def fact_alerts(src: dict[str, DataFrame]) -> DataFrame:
     """Alert fact: aggregate each dlt child to alert grain, then a left-join
     star (fact_alerts.sql:3-94). Children and dims are broadcast."""
-    b = (
-        src["alerts"]
-        .filter(F.col("feed") == "alerts")
-        .select(
-            "feed",
-            "entity_id",
-            "as_of",
-            F.col("_dlt_id").alias("alert_id"),
-            "_dlt_load_id",
-        )
-    )
-    hdr = (
-        src["alerts__alert__header_text__translation"]
-        .groupBy(F.col("_dlt_parent_id").alias("alert_id"))
-        .agg(bq.any_value_det(F.col("text")).alias("header_text"))
-    )
-    desc = (
-        src["alerts__alert__description_text__translation"]
-        .groupBy(F.col("_dlt_parent_id").alias("alert_id"))
-        .agg(bq.any_value_det(F.col("text")).alias("description_text"))
-    )
-    ap = (
-        src["alerts__alert__active_period"]
-        .groupBy(F.col("_dlt_parent_id").alias("alert_id"))
-        .agg(
-            F.min(
-                F.when(
-                    F.col("start").isNotNull(),
-                    bq.timestamp_seconds(bq.safe_cast(F.col("start"), "long")),
-                )
-            ).alias("first_start_ts_utc"),
-            F.max(
-                F.when(
-                    F.col("end").isNotNull(),
-                    bq.timestamp_seconds(bq.safe_cast(F.col("end"), "long")),
-                )
-            ).alias("last_end_ts_utc"),
-        )
-    )
-    ie = (
-        src["alerts__alert__informed_entity"]
-        .groupBy(F.col("_dlt_parent_id").alias("alert_id"))
-        .agg(
-            bq.any_value_det(F.coalesce(F.col("trip__route_id"), F.col("route_id"))).alias("route_id"),
-            bq.any_value_det(F.col("trip__trip_id")).alias("rt_trip_id"),
-            bq.any_value_det(F.col("stop_id")).alias("stop_id"),
-            bq.any_value_det(F.col("agency_id")).alias("agency_id"),
-        )
-    )
-    routes = src["routes"].select(
-        "route_id", "route_short_name", "route_long_name", "route_type",
-        "route_color", "route_text_color", "route_desc", "agency_id",
-    )
-    stops = src["stops"].select("stop_id", "stop_name", "parent_station", "stop_lat", "stop_lon")
-
-    return (
-        b.join(F.broadcast(hdr), "alert_id", "left")
-        .join(F.broadcast(desc), "alert_id", "left")
-        .join(F.broadcast(ap), "alert_id", "left")
-        .join(F.broadcast(ie.alias("i")), "alert_id", "left")
-        .join(F.broadcast(stops.alias("s")), F.col("i.stop_id") == F.col("s.stop_id"), "left")
-        .join(F.broadcast(routes.alias("r")), F.col("i.route_id") == F.col("r.route_id"), "left")
-        .select(
-            "feed",
-            "entity_id",
-            "as_of",
-            "alert_id",
-            "header_text",
-            "description_text",
-            "first_start_ts_utc",
-            "last_end_ts_utc",
-            F.col("i.route_id").alias("route_id"),
-            "route_short_name",
-            "route_long_name",
-            "route_type",
-            "route_color",
-            "route_text_color",
-            "route_desc",
-            F.col("r.agency_id").alias("agency_id"),
-            F.col("s.stop_name").alias("stop_name"),
-            F.col("s.parent_station").alias("parent_station"),
-            F.col("s.stop_lat").alias("stop_lat"),
-            F.col("s.stop_lon").alias("stop_lon"),
-        )
+    return frame_sql(
+        FACT_ALERTS_SQL,
+        alerts=src["alerts"],
+        header=src["alerts__alert__header_text__translation"],
+        description=src["alerts__alert__description_text__translation"],
+        active_period=src["alerts__alert__active_period"],
+        informed_entity=src["alerts__alert__informed_entity"],
+        stops=src["stops"],
+        routes=src["routes"],
     )
 
 

@@ -18,8 +18,9 @@ session.
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable confs every query depends on. Applied defensively by each
 # public query entry point because the verify driver owns its own session.
@@ -183,3 +184,33 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return pin_session(spark)
+
+
+def frame_sql(text: str, args: dict | None = None, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text, args, **frames)`` on the first frame's session: each
+    ``{name}`` in ``text`` names the frame passed as ``name`` (literal braces
+    doubled, as for ``str.format``) and ``args`` bind ``:name`` markers.
+
+    Two defects of PySpark's own ``{name}`` frame arguments make this a
+    helper. PySpark drops each frame's temporary view with
+    ``catalog.dropTempView``, which also uncaches every cached plan equal
+    to the view's, so a persisted model passed in would silently lose its
+    cache. And it registers a frame in the frame's own session, so frames
+    of two sessions (a ``foreachBatch`` micro-batch and static sources)
+    cannot meet in one query. Here each frame is a global temporary view,
+    visible from every session of the application, dropped from the
+    session catalog directly once the query is analyzed (the returned
+    DataFrame holds the resolved plans, not the names).
+    """
+    session = next(iter(frames.values())).sparkSession
+    catalog = session._jsparkSession.sessionState().catalog()
+    names: dict[str, str] = {}
+    try:
+        for key, df in frames.items():
+            names[key] = f"_{key}_{uuid.uuid4().hex}"
+            df.createOrReplaceGlobalTempView(names[key])
+        db = catalog.globalTempDatabase()
+        return session.sql(text.format(**{k: f"{db}.{n}" for k, n in names.items()}), args)
+    finally:
+        for name in names.values():
+            catalog.dropGlobalTempView(name)

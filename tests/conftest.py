@@ -47,7 +47,8 @@ def duck():
     # /tmp/blockmgr-* dirs from dead JVMs are the thing that actually
     # filled the disk in r6 — clean those first when space runs low)
     con.execute("SET max_temp_directory_size='60GiB'")
-    # r8 sf3 finding (rehearsal_sf3_heavy_r8 + tools/diag_cc_sf3.py): at the
+    # r8 sf3 finding (rehearsal_sf3_heavy_r8 + tools/diag_cc_sf3.py, since
+    # removed; it remains in git history): at the
     # default thread count (= all 32 cores) the CC-chain oracle's posting-
     # join prefix blows the spill cap — every thread holds its own operator
     # partitions, so spill volume SCALES WITH THREADS under memory pressure

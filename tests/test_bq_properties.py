@@ -39,14 +39,17 @@ def test_timestamp_diff_truncates_toward_zero(spark, duck, tmp_path_factory, pai
     pdf.to_parquet(path, index=False, coerce_timestamps="us")
 
     sdf = spark.read.parquet(path)
-    got = {
-        r.i: (r.s, r.m)
-        for r in sdf.select(
-            "i",
-            bq.timestamp_diff(F.col("a"), F.col("b"), "SECOND").alias("s"),
-            bq.timestamp_diff(F.col("a"), F.col("b"), "MINUTE").alias("m"),
-        ).collect()
-    }
+    rows = sdf.select(
+        "i",
+        bq.timestamp_diff(F.col("a"), F.col("b"), "SECOND").alias("s"),
+        bq.timestamp_diff(F.col("a"), F.col("b"), "MINUTE").alias("m"),
+        # the spelling of D9 in the SQL models and metrics
+        F.expr("(unix_micros(a) - unix_micros(b)) div 1000000").alias("sql_s"),
+        F.expr("(unix_micros(a) - unix_micros(b)) div 60000000").alias("sql_m"),
+    ).collect()
+    got = {r.i: (r.s, r.m) for r in rows}
+    for r in rows:
+        assert (r.sql_s, r.sql_m) == (r.s, r.m), r
     exp_rows = duck.execute(
         f"""
         SELECT i,

@@ -120,3 +120,27 @@ def test_metric_parity(mta_models, mta_src, duck_mta, name):  # noqa: F811
     df = CASES[name](mta_models, mta_src)
     errs = compare(name, df, duck_mta, METRIC_SQL[name])
     assert not errs, "\n".join(errs)
+
+
+def test_models_and_metrics_match_oracle_with_ansi_on(spark, mta_dir, duck_mta):  # noqa: F811
+    """Vanilla Spark 4 runs with ANSI on, and so does any session nobody
+    pinned: the 4 models and M1-M12, built and executed under
+    spark.sql.ansi.enabled=true, must still equal the DuckDB oracle (no cast,
+    division or array access in the SQL may start raising)."""
+    from mta_rtf_dbt_spark.plans.mta_models import MODELS, build_all
+    from mta_rtf_dbt_spark.sources.fixtures import MTA_TABLES
+    from mta_rtf_dbt_spark.sources.registry import load
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        src = {t: load(spark, mta_dir, t) for t in MTA_TABLES}
+        models = build_all(spark, src, register_views=False)
+        errs = []
+        for name in MODELS:
+            errs += compare(name, models[name], duck_mta, f"SELECT * FROM o_{name}")
+        for name, case in CASES.items():
+            errs += compare(name, case(models, src), duck_mta, METRIC_SQL[name])
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert not errs, "\n".join(errs)

@@ -144,6 +144,81 @@ def test_materialized_model_partition_pruning(spark, mta_models, tmp_path_factor
         )
 
 
+@pytest.fixture
+def mta_fresh(spark, mta_dir):  # noqa: F811
+    """(sources, models) of a build of its own, so persisting or counting
+    here leaves the shared ``mta_models`` fixture untouched."""
+    from mta_rtf_dbt_spark.plans.mta_models import build_all
+    from mta_rtf_dbt_spark.sources.fixtures import MTA_TABLES
+    from mta_rtf_dbt_spark.sources.registry import load
+
+    src = {t: load(spark, mta_dir, t) for t in MTA_TABLES}
+    return src, build_all(spark, src, register_views=False)
+
+
+# py4j commands the building thread sends, on the MTA fixture. The models and
+# metrics are SQL text, so a build is a few calls per frame and one parse: 60
+# per build_all and 10-37 per metric. The DataFrame-API versions sent
+# 3 730-3 735 per build_all and 171-1 493 per metric.
+BUILD_ALL_PY4J_BUDGET = 300
+METRIC_PY4J_BUDGET = 100
+
+
+def test_mta_builds_stay_within_py4j_budget(spark, mta_fresh, monkeypatch):
+    """Building the 4 models and each of M1-M12 costs a bounded number of
+    Python->JVM round trips; a model or metric drifting back to per-expression
+    DataFrame calls fails here before it shows up as plan-build time."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from mta_rtf_dbt_spark.plans.mta_models import build_all
+    from tests.test_mta_metrics import CASES
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        # this thread only: py4j's finalizer thread detaches garbage-collected
+        # JVM objects in batches, whenever the collector happens to run
+        sent[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+
+    def commands(build) -> int:
+        sent[0] = 0
+        build()
+        return sent[0]
+
+    src, models = mta_fresh
+    n_models = commands(lambda: build_all(spark, src, register_views=False))
+    n_metrics = {name: commands(lambda c=case: c(models, src)) for name, case in CASES.items()}
+    assert n_models < BUILD_ALL_PY4J_BUDGET, n_models
+    over = {k: n for k, n in n_metrics.items() if n >= METRIC_PY4J_BUDGET}
+    assert not over, (over, n_metrics)
+
+
+def test_persisted_model_substitutes_into_metric_plans(spark, mta_fresh):
+    """plans/mta_driver persists fact_trips_stops once and points all 12
+    metrics at it: every metric plan, fact_trips' (M10/M11) included, must
+    read the cached relation, not rebuild the model from its sources, and
+    building the metrics must leave the model cached."""
+    from tests.test_mta_metrics import CASES
+
+    src, models = mta_fresh
+    fts = models["fact_trips_stops"].persist()
+    try:
+        models = {**models, "fact_trips_stops": fts}
+        plans = {name: _plan(case(models, src)) for name, case in CASES.items()}
+        missing = [name for name, plan in plans.items() if "InMemoryTableScan" not in plan]
+        assert not missing, missing
+        assert "InMemoryTableScan" in _plan(fts.select("trip_uid"))
+    finally:
+        fts.unpersist()
+
+
 def test_new_ops_plan_shapes(spark):
     """Round-2 operators must keep their designed plan shapes: no cartesian
     products on data paths, bounded broadcasts, and chunking stays a pure
