@@ -1,9 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``queries()`` aggregates every named plan registry in the engine; each entry
-has a matching DuckDB oracle in ``oracle_sql()`` unless the op is genuinely
+``queries()`` returns every entry of the engine's one registry
+(``mta_rtf_dbt_spark.registry``) in ``_PRIORITY`` order; each entry has a
+matching DuckDB oracle in ``oracle_sql()`` unless the op is genuinely
 non-SQL-expressible (those get the driver's weaker rows-only check and are
-marked in their module docstrings).
+marked in their module docstrings). Both first import every registering
+module (``registry.load_all()``), which also writes the MTA fixture parquet.
 """
 
 from __future__ import annotations
@@ -12,50 +14,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _registries():
-    """(QUERIES, ORACLE) pairs from every plan/operator module."""
-    import importlib
-
-    mods = [
-        "mta_rtf_dbt_spark.plans.relational",
-        "mta_rtf_dbt_spark.plans.tpch_extra",
-        "mta_rtf_dbt_spark.plans.mta_driver",
-        "mta_rtf_dbt_spark.metrics.events_analog",
-        "mta_rtf_dbt_spark.operators.dedup",
-        "mta_rtf_dbt_spark.operators.similarity",
-        "mta_rtf_dbt_spark.operators.textops",
-        "mta_rtf_dbt_spark.operators.textprep",
-        "mta_rtf_dbt_spark.operators.multimodal",
-        "mta_rtf_dbt_spark.streaming.jobs",
-        "mta_rtf_dbt_spark.sources.ingest",
-        "mta_rtf_dbt_spark.operators.quality",
-        "mta_rtf_dbt_spark.operators.merge",
-        "mta_rtf_dbt_spark.operators.shard",
-        "mta_rtf_dbt_spark.operators.incremental",
-        "mta_rtf_dbt_spark.operators.scd2",
-        "mta_rtf_dbt_spark.operators.asof",
-        "mta_rtf_dbt_spark.operators.sketches",
-        "mta_rtf_dbt_spark.operators.graph",
-        "mta_rtf_dbt_spark.operators.sampling",
-        "mta_rtf_dbt_spark.sources.formats",
-        "mta_rtf_dbt_spark.operators.pyudtf",
-        "mta_rtf_dbt_spark.operators.tokenize",
-        "mta_rtf_dbt_spark.operators.pipeline",
-        "mta_rtf_dbt_spark.operators.lm",
-        "mta_rtf_dbt_spark.operators.layout",
-        "mta_rtf_dbt_spark.operators.scale",
-        "mta_rtf_dbt_spark.operators.privacy",
-        "mta_rtf_dbt_spark.operators.geo",
-    ]
-    out = []
-    for m in mods:
-        try:
-            mod = importlib.import_module(m)
-        except ImportError:
-            continue
-        out.append((getattr(mod, "QUERIES", {}), getattr(mod, "ORACLE", {})))
-    return out
+from mta_rtf_dbt_spark import registry
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -319,14 +278,10 @@ def _ordered(merged: dict) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for qs, _ in _registries():
-        merged.update(qs)
-    return _ordered(merged)
+    registry.load_all()
+    return _ordered(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    merged: dict[str, str] = {}
-    for _, osql in _registries():
-        merged.update(osql)
-    return _ordered(merged)
+    registry.load_all()
+    return _ordered(registry.ORACLE)

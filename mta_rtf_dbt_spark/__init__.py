@@ -11,6 +11,7 @@ Layers (SURVEY.md §7):
   - :mod:`mta_rtf_dbt_spark.operators`  — LLM-data-pipeline operators (dedup, similarity,
                                           text analysis, multimodal)
   - :mod:`mta_rtf_dbt_spark.streaming`  — Structured Streaming ingestion head
+  - :mod:`mta_rtf_dbt_spark.registry`   — the one query registry: ``@q`` entries + DuckDB oracles
 
 Everything is expressed with the DataFrame API / Spark SQL so Catalyst supplies
 optimization (predicate pushdown, column pruning, broadcast selection, AQE) and the

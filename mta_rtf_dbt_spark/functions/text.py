@@ -63,14 +63,18 @@ def char_ngrams(col: Column, n: int = 3) -> Column:
     return F.transform(idx, lambda i: F.substr(norm, i, F.lit(n)))
 
 
+def token_ngrams(toks: Column, n: int = 3) -> Column:
+    """Word n-grams of a token array -> array<string>: each window of n
+    tokens, space-joined (``array_join(slice(toks, i, n), ' ')``). An array
+    shorter than n yields itself as one gram; callers that mirror the
+    oracle's ``len(arr) >= n`` guard filter those rows first."""
+    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
+    return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
+
+
 def word_ngrams(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles -> array<string> (space-joined)."""
-    toks = tokens(normalize(col))
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(cnt - F.lit(n - 1), F.lit(1)))
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i, n), " ")
-    )
+    """Word n-gram shingles of raw text -> array<string> (space-joined)."""
+    return token_ngrams(tokens(normalize(col)), n)
 
 
 def punct_ratio(col: Column) -> Column:

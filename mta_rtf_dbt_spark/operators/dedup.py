@@ -25,32 +25,12 @@ shingle can't make candidate generation quadratic.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import text as T
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -81,29 +61,33 @@ def dedup_exact(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Word n-gram Jaccard — inverted-index join (the exact-similarity baseline).
 # ---------------------------------------------------------------------------
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Distinct word n-gram shingles per doc. Docs with < n tokens are
-    dropped (mirrors the oracle's len(arr) >= n guard).
+def _doc_grams(
+    docs: DataFrame, n: int, text_col: str, id_col: str
+) -> tuple[DataFrame, F.Column]:
+    """``(tokenized, grams)``: the (doc_id, __toks) frame with docs of < n
+    tokens dropped (mirrors the oracle's len(arr) >= n guard), and the
+    Column of each doc's distinct word n-grams over it. Every shingle form
+    is ``tokenized.select("doc_id", f(grams))``, so it stays one projection.
 
     Tokenizes ONCE into a rider column (r11): the length guard and the
     n-gram build previously each evaluated normalize+split — common
     subexpression elimination works within one projection, not across a
     Filter and the Project above it, so every doc paid the regex
-    whitespace collapse and tokenization twice. Shingle strings are
-    unchanged (``array_join(slice(toks, i, n))`` over the same token
-    array — the pipeline module's _shingles_from_tokens identity)."""
+    whitespace collapse and tokenization twice."""
     docs = spread(docs)  # shingling is CPU-bound; don't let a one-row-group scan serialize it
     toks = F.col("__toks")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            T.tokens(T.normalize(F.col(text_col))).alias("__toks"),
-        )
-        .filter(F.size(toks) >= n)
-        .select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
-    )
+    tokenized = docs.select(
+        F.col(id_col).alias("doc_id"),
+        T.tokens(T.normalize(F.col(text_col))).alias("__toks"),
+    ).filter(F.size(toks) >= n)
+    return tokenized, F.array_distinct(T.token_ngrams(toks, n))
+
+
+def shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, shingle): distinct word n-gram shingles per doc, one row
+    each — :func:`shingle_sets`' sets exploded (unsorted)."""
+    tokenized, grams = _doc_grams(docs, n, text_col, id_col)
+    return tokenized.select("doc_id", F.explode(grams).alias("shingle"))
 
 
 def shingle_sets(
@@ -111,25 +95,15 @@ def shingle_sets(
 ) -> DataFrame:
     """(doc_id, sl0): each doc's SORTED distinct shingle set as one array —
     :func:`shingles` minus the explode, for consumers that want per-doc
-    sets (r12). ``sort_array(array_distinct(grams))`` over the same token
-    rider is element-identical to re-collecting the exploded relation
+    sets (r12). ``sort_array`` over the same distinct grams is
+    element-identical to re-collecting the exploded relation
     (``sort_array(collect_set(shingle))``), and the < n-token guard drops
     the same docs — so set-group pipelines built on either source produce
     identical groups. The point is shuffle shape: the explode →
     groupBy(doc_id) round trip re-exchanged the full shingle payload just
     to reassemble arrays this projection already holds."""
-    docs = spread(docs)
-    toks = F.col("__toks")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            T.tokens(T.normalize(F.col(text_col))).alias("__toks"),
-        )
-        .filter(F.size(toks) >= n)
-        .select("doc_id", F.sort_array(F.array_distinct(grams)).alias("sl0"))
-    )
+    tokenized, grams = _doc_grams(docs, n, text_col, id_col)
+    return tokenized.select("doc_id", F.sort_array(grams).alias("sl0"))
 
 
 def jaccard_group_graph(
@@ -468,26 +442,9 @@ def minhash_signatures(
     # executed plan and every result byte are unchanged.
     seeds = _minhash_seeds(num_hashes)
     if shingle_rel is None:
-        d = spread(docs)  # signature is CPU-bound; don't serialize on one row group
-        # tokenize once into a rider column (r11) — the guard and the
-        # n-gram build otherwise each pay normalize+split (see shingles())
-        toks = F.col("__toks")
-        idx = F.sequence(
-            F.lit(1), F.greatest(F.size(toks) - F.lit(shingle_n - 1), F.lit(1))
-        )
-        grams = F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i, shingle_n), " ")
-        )
-        base = (
-            d.select(
-                F.col(id_col).alias("doc_id"),
-                T.tokens(T.normalize(F.col(text_col))).alias("__toks"),
-            )
-            .filter(F.size(toks) >= shingle_n)
-            .select(
-                "doc_id",
-                F.transform(F.array_distinct(grams), _poly_hash_col).alias("hb"),
-            )
+        tokenized, grams = _doc_grams(docs, shingle_n, text_col, id_col)
+        base = tokenized.select(
+            "doc_id", F.transform(grams, _poly_hash_col).alias("hb")
         )
         mins = ", ".join(
             f"array_min(transform(hb, h -> (h * {a}L + {b}L) % {MINHASH_P}L))"

@@ -28,34 +28,12 @@ No collects, no Python in the row path.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import text as T
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
-
 
 _ARR_SQL = (
     "list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),"

@@ -33,8 +33,6 @@ that survives 1000 executors.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,28 +40,8 @@ from mta_rtf_dbt_spark.functions import text as T
 from mta_rtf_dbt_spark.operators.sampling import _A, _C, _M, mix_source_quota
 from mta_rtf_dbt_spark.operators.shard import TOKENS_PER_SHARD, shard_plan
 from mta_rtf_dbt_spark.operators.textprep import contamination_pairs
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
-
 
 MIN_TOKENS = 15
 MIN_LEXDIV = 0.33
@@ -196,13 +174,11 @@ def _shingles_from_tokens(
     """Distinct word n-gram shingles per doc, sliding over an ALREADY
     tokenized array column — string-identical to
     :func:`operators.dedup.shingles` (same guard, same
-    ``array_join(slice(toks, i, n), ' ')`` construction), minus its
-    normalize+split pass, for callers that carry the token array."""
+    :func:`functions.text.token_ngrams`), minus its normalize+split pass,
+    for callers that carry the token array."""
     toks = F.col(arr_col)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
     return df.filter(F.size(toks) >= n).select(
-        "doc_id", F.explode(F.array_distinct(grams)).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(T.token_ngrams(toks, n))).alias("shingle")
     )
 
 

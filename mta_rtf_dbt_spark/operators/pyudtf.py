@@ -14,33 +14,14 @@ gate as everything else.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.sources.registry import load, spread
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
 
 
 @udtf(returnType="seg_idx int, segment string, n_words int", useArrow=True)

@@ -16,36 +16,15 @@ no state, stable under repartitioning — at 100 TB the split costs a scan.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.sources.registry import load
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
 
 _A = 1103515245
 _C = 12345
 _M = 2_147_483_648  # 2^31
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
 
 
 def lcg_bucket(id_col: Column, n_buckets: int = 100, seed: int = 0) -> Column:

@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mta_rtf_dbt_spark.registry import q
+from mta_rtf_dbt_spark.sources.registry import load
+
 # Aggregates that decompose into (partial, final) over the same column — the
 # property two-stage salting needs. 'count' is COUNT(*) (row count, NULLs
 # included): F.count(col) would silently diverge from a COUNT(*) oracle the
@@ -134,28 +137,6 @@ def table_stats(spark: SparkSession, table: str, columns: list[str] | None = Non
 # the plain formulation DuckDB runs. (Aggregated outputs avoid float sums:
 # count/min/max are order-free and the summed columns are integers.)
 # ---------------------------------------------------------------------------
-from collections.abc import Callable  # noqa: E402
-
-from mta_rtf_dbt_spark.session import pin_session  # noqa: E402
-from mta_rtf_dbt_spark.sources.registry import load  # noqa: E402
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
 
 
 @q(

@@ -23,17 +23,13 @@ LSH is one explode (4 rows/vector) + one equi-join on (band, signature).
 from __future__ import annotations
 
 import random
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import vectors as V
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
 
 DIM = 64          # testdata embedding dimensionality (TESTDATA.md)
 N_PLANES = 16
@@ -56,21 +52,6 @@ _rng_nd = random.Random(11)
 ND_PLANES: list[list[float]] = [
     [round(_rng_nd.uniform(-1.0, 1.0), 6) for _ in range(DIM)] for _ in range(ND_N_PLANES)
 ]
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
 
 
 def cosine_topk(

@@ -9,17 +9,15 @@ driver can hash-check against DuckDB, not only local pytest.
 There is no MTA-shaped data in ``/root/testdata``, so these entries run on
 the deterministic fixture parquet from ``sources/fixtures.py`` (seeded RNG —
 byte-stable across machines). The fixtures are (re)generated at *import*
-time: ``_registries()`` in ``__spark_entry__.py`` imports this module before
-the driver obtains either ``queries()`` or ``oracle_sql()``, so the parquet
-exists no matter which engine the driver runs first. The oracle SQL reads
+time: ``registry.load_all()`` imports this module, and ``__spark_entry__.py``
+runs it before it returns either ``queries()`` or ``oracle_sql()``, so the
+parquet exists no matter which engine the driver runs first. The oracle SQL reads
 the same files via ``read_parquet`` CTEs and nests the independent DuckDB
 model re-implementation (plans/mta_oracle.py) — the exact SQL the local
 parity tests have been green against since round 1.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,30 +34,11 @@ from mta_rtf_dbt_spark.plans.mta_oracle import (
     STOP_A,
     STOP_B,
 )
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.sources.fixtures import MTA_TABLES, ensure_fixtures
 from mta_rtf_dbt_spark.sources.registry import load
 
 FIX_DIR = ensure_fixtures()
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
 
 
 def _fixture_ctes(tables: list[str]) -> str:

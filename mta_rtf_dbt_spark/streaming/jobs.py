@@ -15,12 +15,11 @@ reference's keep-everything batch semantics.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mta_rtf_dbt_spark.session import pin_session
+from mta_rtf_dbt_spark import registry
+from mta_rtf_dbt_spark.registry import q
 from mta_rtf_dbt_spark.streaming.head import (
     first_observation,
     run_to_memory,
@@ -29,25 +28,7 @@ from mta_rtf_dbt_spark.streaming.head import (
     windowed_actor_counts,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
 SESSION_GAP_MIN = 30
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            pin_session(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        QUERIES[name] = wrapped
-        if sql is not None:
-            ORACLE[name] = sql
-        return wrapped
-
-    return deco
 
 
 @q(
@@ -164,7 +145,7 @@ def stream_sessionize(spark, sf_dir):
 
 @q(
     "sessionize_batch",
-    ORACLE["stream_sessionize"],
+    registry.ORACLE["stream_sessionize"],
 )
 def sessionize_batch(spark, sf_dir):
     """The same session_window plan over the batch reader — one code path for

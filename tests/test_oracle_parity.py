@@ -49,12 +49,36 @@ def test_entry_smoke(spark):
     assert len(df.columns) > 0
 
 
+def _registry_source_scan():
+    """(modules defining QUERIES/ORACLE/q, modules importing registry.q),
+    read from the package source with no Spark."""
+    import re
+    from pathlib import Path
+
+    import mta_rtf_dbt_spark
+
+    pkg = Path(mta_rtf_dbt_spark.__file__).parent
+    defining, importing = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        module = ".".join(path.relative_to(pkg.parent).with_suffix("").parts)
+        src = path.read_text()
+        if re.search(r"^(QUERIES|ORACLE)\b\s*[:=]|^\s*def q\(", src, re.M):
+            defining.add(module)
+        if re.search(r"^from mta_rtf_dbt_spark\.registry import .*\bq\b", src, re.M):
+            importing.add(module)
+    return defining, importing
+
+
 def test_registry_consistency():
     """Guard the driver contract: every _PRIORITY name resolves (a typo
     would silently demote an entry to the tail of the driver's check
     budget), every oracle belongs to a query, and the priority prefix is
-    emitted first."""
+    emitted first. Guard the one registry: only ``registry.py`` defines
+    QUERIES/ORACLE/q, every module that registers entries is listed in
+    ``registry.MODULES`` (so ``load_all`` imports it), and a name cannot be
+    registered twice."""
     import __spark_entry__ as e
+    from mta_rtf_dbt_spark import registry
 
     qs, osql = e.queries(), e.oracle_sql()
     missing = [n for n in e._PRIORITY if n not in qs]
@@ -63,3 +87,31 @@ def test_registry_consistency():
     assert list(qs)[: len(e._PRIORITY)] == e._PRIORITY
     dupes = len(e._PRIORITY) != len(set(e._PRIORITY))
     assert not dupes
+
+    defining, importing = _registry_source_scan()
+    assert defining == {"mta_rtf_dbt_spark.registry"}
+    assert importing == set(registry.MODULES)
+
+    before = (dict(registry.QUERIES), dict(registry.ORACLE))
+    with pytest.raises(ValueError, match="mta_m3"):
+        registry.q("mta_m3", "SELECT 1")(lambda spark, sf_dir: None)
+    assert (registry.QUERIES, registry.ORACLE) == before
+
+
+def test_registry_entries_pin_session(spark):
+    """A driver entry pins ANSI off and UTC on whatever session it gets:
+    the driver's own session is vanilla Spark 4 (ANSI on, local zone)."""
+    import __spark_entry__ as e
+    from tests.conftest import SF_SMOKE
+
+    keys = ("spark.sql.ansi.enabled", "spark.sql.session.timeZone")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        e.queries()["q1_pricing_summary"](spark, SF_SMOKE)
+        assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -216,9 +216,11 @@ def test_kmv_setops_estimates(spark, events):
     """Pairwise intersection estimates from KMV state: exact when the union
     sketch retains < k values; otherwise within a loose relative bound of
     the true overlap (and never negative)."""
-    from mta_rtf_dbt_spark.operators.sketches import KMV_K, QUERIES
+    import __spark_entry__ as e
+    from mta_rtf_dbt_spark.operators.sketches import KMV_K
+    from tests.conftest import SF_CORRECT
 
-    out = QUERIES["a_kmv_setops"](spark, "/root/testdata/sf0.01").collect()
+    out = e.queries()["a_kmv_setops"](spark, SF_CORRECT).collect()
     exact = {}
     users = {
         r.event_type: set(u[0] for u in events.filter(F.col("event_type") == r.event_type)

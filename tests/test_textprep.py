@@ -37,7 +37,7 @@ def test_pii_scrub_cross_engine_parity(spark, duck, tmp_path):
     RE2 dialect parity claim on text that actually matches."""
     import pandas as pd
 
-    from mta_rtf_dbt_spark.operators.textprep import ORACLE
+    import __spark_entry__ as e
     from tests.oracle_harness import compare
 
     rows = [
@@ -55,7 +55,7 @@ def test_pii_scrub_cross_engine_parity(spark, duck, tmp_path):
     from mta_rtf_dbt_spark.operators.textprep import pii_scrub
 
     out = pii_scrub(spark.read.parquet(path))
-    errs = compare("pii_planted", out, duck, ORACLE["text_pii_scrub"])
+    errs = compare("pii_planted", out, duck, e.oracle_sql()["text_pii_scrub"])
     assert not errs, "\n".join(errs)
 
 
