@@ -48,10 +48,11 @@ reference's production hint (metrics_guide.md:385).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mta_rtf_dbt_spark.session import frame_sql
+from mta_rtf_dbt_spark.session import RUNTIME_CONFS, frame_sql
 
 # ---------------------------------------------------------------------------
 # fact_trips_stops
@@ -332,12 +333,48 @@ MODELS: dict[str, tuple[Callable[[dict[str, DataFrame]], DataFrame], list[str]]]
 }
 
 
+# The source tables the DAG reads (model names are resolved inside it).
+SOURCES = tuple(sorted({d for _, deps in MODELS.values() for d in deps} - MODELS.keys()))
+
+
 def build_all(
     spark: SparkSession, sources: dict[str, DataFrame], register_views: bool = True
 ) -> dict[str, DataFrame]:
     """Resolve the model DAG in topological order (models may depend on other
-    models by name); equivalent of ``dbt run`` with materialized='view'."""
-    resolved: dict[str, DataFrame] = dict(sources)
+    models by name); equivalent of ``dbt run`` with materialized='view'.
+
+    Resolved once per inputs: the models are keyed on (session, identity of
+    the ``SOURCES`` frames, the session's ``RUNTIME_CONFS`` values). ANSI
+    mode and the time zone are fixed into casts and time expressions when a
+    plan is analyzed, so a changed conf is a new build. With the sources
+    themselves resolved once per file version (``sources.registry.load``),
+    a query over the model views pays only for its own metric. A hit
+    returns a fresh dict of the same lazy model frames, and registers them
+    as views when asked. Nothing executed is cached: every query over a
+    model plans and runs anew."""
+    conf = spark.conf
+    built = dict(
+        _built(
+            spark,
+            tuple((n, sources.get(n)) for n in SOURCES),
+            tuple(conf.get(k) for k in RUNTIME_CONFS),
+        )
+    )
+    if register_views:
+        for name, df in built.items():
+            df.createOrReplaceTempView(name)
+    return built
+
+
+@lru_cache(maxsize=32)
+def _built(
+    spark: SparkSession,
+    inputs: tuple[tuple[str, DataFrame | None], ...],
+    confs: tuple[str | None, ...],
+) -> dict[str, DataFrame]:
+    """The DAG build behind :func:`build_all`. The key holds the input frames,
+    so their ids are never reused while the entry lives."""
+    resolved: dict[str, DataFrame] = {n: df for n, df in inputs if df is not None}
     built: dict[str, DataFrame] = {}
     remaining = dict(MODELS)
     while remaining:
@@ -347,8 +384,6 @@ def build_all(
                 df = builder(resolved)
                 resolved[name] = df
                 built[name] = df
-                if register_views:
-                    df.createOrReplaceTempView(name)
                 del remaining[name]
                 progressed = True
         if not progressed:

@@ -95,7 +95,10 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
-_SHIPPED_SESSIONS: set[int] = set()
+# Spark application ids the package was shipped to. Not ``id(spark)``: the
+# set holds no session, so a stopped and collected session's id can be
+# reused by a new session whose new context never got the file.
+_SHIPPED_SESSIONS: set[str] = set()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -105,9 +108,13 @@ def _ship_package(spark: SparkSession) -> None:
     cloudpickled *by reference* — workers must import the module. The driver
     harness runs from an arbitrary cwd, so zip the package and ``addPyFile``
     it (the same mechanism as ``spark-submit --py-files`` on a real cluster).
-    Once per session.
+    Once per SparkContext.
     """
-    if id(spark) in _SHIPPED_SESSIONS:
+    try:
+        app_id = spark.sparkContext.applicationId
+    except Exception:
+        return  # e.g. Spark Connect: no addPyFile — imports must come from env
+    if app_id in _SHIPPED_SESSIONS:
         return
     import tempfile
     import zipfile
@@ -138,8 +145,8 @@ def _ship_package(spark: SparkSession) -> None:
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:
-        pass  # e.g. Spark Connect without addPyFile — imports must come from env
-    _SHIPPED_SESSIONS.add(id(spark))
+        pass
+    _SHIPPED_SESSIONS.add(app_id)
 
 
 def pin_session(spark: SparkSession) -> SparkSession:

@@ -16,7 +16,18 @@ Every source of both families is declared in
 runs. Before the first read of a file, a driver-side footer check compares it
 with the declaration and raises ``SchemaDriftError`` naming the column that
 went missing, appeared or changed type. Paths that are not declared (tables
-the engine wrote itself) are read with inference.
+the engine wrote itself) are read with the schema Spark stored in their
+parquet footers, also without a job; only a file without one is inferred.
+
+A load is resolved once per file version, as BigQuery resolves a query over
+views against cached catalog metadata: :func:`load` keys its result on
+(session, path, name, ``schemas.file_signature(path)``), the size and mtime
+of every data file under the path. While the signature holds, it returns the
+DataFrame it resolved before (a lazy plan, no data); a rewrite, an append
+into a partition directory or a removed file changes the signature, and the
+next load resolves, and drift-checks, the new files. The footer reads are
+cached on the same signature. Nothing executed is cached here: every query
+over a returned frame plans and runs anew.
 
 Scale posture: on a cluster the same registry points at partitioned
 directories and Catalyst gets partition pruning + predicate pushdown for free;
@@ -25,14 +36,21 @@ nothing here materializes.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampNTZType
 
-from mta_rtf_dbt_spark.sources.schemas import SCHEMAS, declared_schema
+from mta_rtf_dbt_spark.sources.schemas import (
+    SCHEMAS,
+    Signature,
+    declared_schema,
+    file_signature,
+)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -54,10 +72,11 @@ BROADCAST_DIMS = {"region", "nation", "supplier", "part", "customer"}
 
 
 @lru_cache(maxsize=256)
-def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
+def _nanos_timestamp_cols(path: str, sig: Signature) -> tuple[str, ...]:
     """Parquet TIMESTAMP(NANOS) columns — Spark can't map them to
     TimestampType natively (PARQUET_TYPE_ILLEGAL), so the loader reads them as
-    long nanos and converts. Footer-only driver-side peek, cached."""
+    long nanos and converts. Footer-only driver-side peek, cached per file
+    version."""
     try:
         import pyarrow.parquet as pq
 
@@ -67,15 +86,42 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
         return ()
 
 
+@lru_cache(maxsize=256)
+def _spark_written_schema(path: str, sig: Signature) -> StructType | None:
+    """The schema Spark stored in the footer of a table it wrote (key
+    ``org.apache.spark.sql.parquet.row.metadata``), read driver-side from the
+    first data file; None for files written without it. Partition columns
+    are not in it: Spark adds them from the directory names, as inference
+    does."""
+    if not sig:
+        return None
+    import pyarrow.parquet as pq
+
+    rel = sig[0][0]
+    meta = pq.read_schema(os.path.join(path, rel) if rel else path).metadata or {}
+    text = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(text)) if text else None
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one source table (no action triggered — stays a lazy scan).
 
-    A declared source is read with its declared schema, after the footer
-    drift check. Anything else goes through :func:`_inferred`."""
+    Resolved once per (session, file version): see the module docstring."""
     path = os.path.join(sf_dir, f"{name}.parquet")
+    return _resolved(spark, path, name, file_signature(path))
+
+
+@lru_cache(maxsize=256)
+def _resolved(spark: SparkSession, path: str, name: str, sig: Signature) -> DataFrame:
+    """A declared source is read with its declared schema, after the footer
+    drift check; an engine-written table with the schema in its footer;
+    anything else goes through :func:`_inferred`."""
     if name in SCHEMAS:
         return spark.read.schema(declared_schema(path, name)).parquet(path)
-    return _inferred(spark, path)
+    schema = _spark_written_schema(path, sig)
+    if schema is None:
+        return _inferred(spark, path)
+    return _timestamps_as_ltz(spark.read.schema(schema).parquet(path))
 
 
 def _inferred(spark: SparkSession, path: str) -> DataFrame:
@@ -86,18 +132,20 @@ def _inferred(spark: SparkSession, path: str) -> DataFrame:
     exact integer division (``div`` — nanos exceed 2^53, float math would
     corrupt them), matching DuckDB's nanos->micros truncation.
     """
-    ns_cols = _nanos_timestamp_cols(path)
+    ns_cols = _nanos_timestamp_cols(path, file_signature(path))
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    # Belt-and-braces vs spark.sql.parquet.inferTimestampNTZ.enabled drift:
-    # zoneless parquet timestamps must surface as TimestampType (session tz is
-    # pinned UTC so the cast is value-preserving); unix_micros()/withWatermark()
-    # reject TIMESTAMP_NTZ outright.
-    from pyspark.sql.types import TimestampNTZType
+    return _timestamps_as_ltz(df)
 
+
+def _timestamps_as_ltz(df: DataFrame) -> DataFrame:
+    """Belt-and-braces vs spark.sql.parquet.inferTimestampNTZ.enabled drift:
+    zoneless parquet timestamps must surface as TimestampType (session tz is
+    pinned UTC so the cast is value-preserving); unix_micros()/withWatermark()
+    reject TIMESTAMP_NTZ outright."""
     for field in df.schema.fields:
         if isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))

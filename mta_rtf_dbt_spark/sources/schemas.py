@@ -13,7 +13,7 @@ A declared schema alone would turn a missing column into silent NULLs, so
 :func:`declared_schema` first compares the file's parquet footer with the
 declaration and raises :class:`SchemaDriftError` naming the table and every
 missing, unexpected or retyped column. The check runs driver-side, once per
-(path, mtime, size): a rewritten file is checked again.
+:func:`file_signature` of the path: a rewritten file is checked again.
 
 Zoneless ``timestamp[us]`` columns are declared ``TimestampType`` — what
 inference gives under the pinned ``inferTimestampNTZ=false`` — so reads no
@@ -160,8 +160,32 @@ def _zoneless(t: pa.DataType) -> pa.DataType:
     return pa.timestamp(t.unit) if pa.types.is_timestamp(t) else t
 
 
+Signature = tuple[tuple[str, int, int], ...]
+
+
+def file_signature(path: str) -> Signature:
+    """``(relpath, size, mtime_ns)`` of every data file at ``path``: the file
+    itself (relpath ``""``), or each file under the directory, partition
+    subdirectories included. Names starting with ``_`` or ``.`` (Spark's
+    ``_SUCCESS``, ``_temporary``, ``.crc`` files) are skipped, as Spark skips
+    them. Any rewrite, append or removal of a data file changes it; a missing
+    path gives ``()``."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in names:
+            if not n.startswith(("_", ".")):
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
 @lru_cache(maxsize=256)
-def _check_footer(path: str, mtime_ns: int, size: int, name: str) -> None:
+def _check_footer(path: str, sig: Signature, name: str) -> None:
     import pyarrow.dataset as ds
 
     got = ds.dataset(path, format="parquet").schema
@@ -182,6 +206,5 @@ def _check_footer(path: str, mtime_ns: int, size: int, name: str) -> None:
 
 def declared_schema(path: str, name: str) -> StructType:
     """``SCHEMAS[name]``, after checking the file at ``path`` against it."""
-    st = os.stat(path)
-    _check_footer(path, st.st_mtime_ns, st.st_size, name)
+    _check_footer(path, file_signature(path), name)
     return SCHEMAS[name]

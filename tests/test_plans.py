@@ -4,6 +4,8 @@ pruning) must be visible in the executed plans, not assumed."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,35 +146,54 @@ def test_materialized_model_partition_pruning(spark, mta_models, tmp_path_factor
         )
 
 
+def _fresh_sources(spark, mta_dir):  # noqa: F811
+    """The 12 MTA source frames read directly, not through ``registry.load``:
+    frames no cache has seen, so a model build over them is a miss."""
+    from mta_rtf_dbt_spark.sources.fixtures import MTA_TABLES
+    from mta_rtf_dbt_spark.sources.schemas import SCHEMAS
+
+    return {
+        t: spark.read.schema(SCHEMAS[t]).parquet(os.path.join(mta_dir, f"{t}.parquet"))
+        for t in MTA_TABLES
+    }
+
+
 @pytest.fixture
 def mta_fresh(spark, mta_dir):  # noqa: F811
     """(sources, models) of a build of its own, so persisting or counting
     here leaves the shared ``mta_models`` fixture untouched."""
     from mta_rtf_dbt_spark.plans.mta_models import build_all
-    from mta_rtf_dbt_spark.sources.fixtures import MTA_TABLES
-    from mta_rtf_dbt_spark.sources.registry import load
 
-    src = {t: load(spark, mta_dir, t) for t in MTA_TABLES}
+    src = _fresh_sources(spark, mta_dir)
     return src, build_all(spark, src, register_views=False)
 
 
 # py4j commands the building thread sends, on the MTA fixture. The models and
-# metrics are SQL text, so a build is a few calls per frame and one parse: 60
-# per build_all and 10-37 per metric. The DataFrame-API versions sent
-# 3 730-3 735 per build_all and 171-1 493 per metric.
+# metrics are SQL text, so a build is a few calls per frame and one parse: 67
+# per build_all that builds (7 of them read the session's RUNTIME_CONFS, its
+# cache key) and 10-37 per metric. The DataFrame-API versions sent
+# 3 730-3 735 per build_all and 171-1 493 per metric. A build_all over the
+# frames of an earlier one (a cache hit) sends only the 7 conf reads, and a
+# load of an unchanged file sends none (12 loads sent 156 before loads were
+# memoized).
 BUILD_ALL_PY4J_BUDGET = 300
+BUILD_ALL_HIT_PY4J_BUDGET = 20
 METRIC_PY4J_BUDGET = 100
 
 
-def test_mta_builds_stay_within_py4j_budget(spark, mta_fresh, monkeypatch):
+def test_mta_builds_stay_within_py4j_budget(spark, mta_dir, mta_fresh, monkeypatch):  # noqa: F811
     """Building the 4 models and each of M1-M12 costs a bounded number of
     Python->JVM round trips; a model or metric drifting back to per-expression
-    DataFrame calls fails here before it shows up as plan-build time."""
+    DataFrame calls fails here before it shows up as plan-build time. Loading
+    unchanged sources and rebuilding the models over them costs next to
+    nothing: a query over the model views pays only for its own metric."""
     import threading
 
     from py4j.clientserver import ClientServerConnection
 
     from mta_rtf_dbt_spark.plans.mta_models import build_all
+    from mta_rtf_dbt_spark.sources.fixtures import MTA_TABLES
+    from mta_rtf_dbt_spark.sources.registry import load
     from tests.test_mta_metrics import CASES
 
     sent = [0]
@@ -193,9 +214,16 @@ def test_mta_builds_stay_within_py4j_budget(spark, mta_fresh, monkeypatch):
         return sent[0]
 
     src, models = mta_fresh
-    n_models = commands(lambda: build_all(spark, src, register_views=False))
+    fresh = _fresh_sources(spark, mta_dir)
+    n_models = commands(lambda: build_all(spark, fresh, register_views=False))
+    n_hit = commands(lambda: build_all(spark, fresh, register_views=False))
     n_metrics = {name: commands(lambda c=case: c(models, src)) for name, case in CASES.items()}
+    for t in MTA_TABLES:
+        load(spark, mta_dir, t)
+    n_loads = commands(lambda: [load(spark, mta_dir, t) for t in MTA_TABLES])
     assert n_models < BUILD_ALL_PY4J_BUDGET, n_models
+    assert n_hit < BUILD_ALL_HIT_PY4J_BUDGET, n_hit
+    assert n_loads == 0, n_loads
     over = {k: n for k, n in n_metrics.items() if n >= METRIC_PY4J_BUDGET}
     assert not over, (over, n_metrics)
 
