@@ -42,17 +42,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """Sub-word-ish token estimate: count maximal runs of word chars, digits,
-    or single punctuation marks (a BPE-flavored regex, not a trained BPE)."""
-    return F.size(
-        F.filter(
-            F.split(col, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda t: (t != F.lit("")) & (t != F.lit(" ")),
-        )
-    )
-
-
 def char_ngrams(col: Column, n: int = 3) -> Column:
     """Character n-gram shingles over the normalized text -> array<string>.
 
@@ -109,24 +98,6 @@ def fingerprint_sha(col: Column) -> Column:
 # engine's BIGINTs agree bit-for-bit.
 POLY_BASE = 257
 POLY_MOD = 2_147_483_647
-
-
-def poly_hash_expr(sub: str) -> str:
-    """SQL-string twin of :func:`poly_hash` over the SQL expression ``sub``.
-
-    Parses to the identical expression tree (same split/transform/
-    aggregate, same constants), so plans and results are byte-equal to the
-    Column form — the string form exists because building wide signature
-    projections from Python Column operators costs one Py4J round trip per
-    operator, and a 64-hash family built that way spends ~1 s of DRIVER time
-    per plan construction before any execution (measured r6 at sf0.1; the
-    bench rebuilds each entry's plan 3x). One parsed string is one round
-    trip. Use it inside selectExpr/F.expr for wide families; keep the Column
-    form for single-column call sites where readability wins."""
-    return (
-        f"aggregate(transform(split({sub}, ''), c -> cast(ascii(c) as long)), "
-        f"0L, (acc, x) -> (acc * {POLY_BASE}L + x) % {POLY_MOD}L)"
-    )
 
 
 def poly_hash(c: Column) -> Column:

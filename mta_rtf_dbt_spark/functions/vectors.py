@@ -30,11 +30,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diffs = F.zip_with(_to_double(a), _to_double(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
-
-
 def unit(a: Column) -> Column:
     """L2-normalize (NULL-safe: zero vectors stay as-is)."""
     n = norm(a)

@@ -1010,7 +1010,7 @@ def a_mad_outliers(spark, sf_dir):
     med = e.groupBy("event_type").agg(
         F.percentile(F.col("value"), F.lit(0.5)).alias("med")
     )
-    dev = e.join(F.broadcast(med), "event_type").select(
+    dev = e.join(med, "event_type").select(
         "event_type",
         "value",
         "med",
@@ -1021,7 +1021,7 @@ def a_mad_outliers(spark, sf_dir):
         F.percentile(F.col("ad"), F.lit(0.5)).alias("mad")
     )
     return (
-        dev.join(F.broadcast(mad), "event_type")
+        dev.join(mad, "event_type")
         .groupBy("event_type")
         .agg(
             F.round(F.first("med"), 6).alias("median_value"),
@@ -1198,7 +1198,7 @@ def a_winsorize_census(spark, sf_dir):
     standard tail-taming preprocessing before training on heavy-tailed
     features; unlike trimming it keeps the rows, so counts downstream stay
     intact. Clip bounds are exact percentiles (production: approx per D7)
-    broadcast back over the corpus.
+    joined back over the corpus.
 
     Engine-exactness: values AND bounds are micro-integerized (round*1e6 to
     BIGINT) before every comparison and before clipping — ``F.percentile``
@@ -1214,7 +1214,7 @@ def a_winsorize_census(spark, sf_dir):
         F.percentile(F.col("value"), F.lit(0.01)).alias("p01"),
         F.percentile(F.col("value"), F.lit(0.99)).alias("p99"),
     )
-    j = e.join(F.broadcast(b), "event_type")
+    j = e.join(b, "event_type")
     v_micro = F.round(F.col("value") * 1000000, 0).cast("long")
     p01_micro = F.round(F.col("p01") * 1000000, 0).cast("long")
     p99_micro = F.round(F.col("p99") * 1000000, 0).cast("long")
@@ -1277,7 +1277,7 @@ def a_label_entropy(spark, sf_dir):
         .cast("long")
     )
     return (
-        c.join(F.broadcast(t), "d")
+        c.join(t, "d")
         .groupBy("d")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_classes"),
@@ -1409,8 +1409,8 @@ def a_market_basket_rules(spark, sf_dir):
     ia = item.select(F.col("l_partkey").alias("ant"), F.col("item_n").alias("ant_n"))
     ic = item.select(F.col("l_partkey").alias("cons"), F.col("item_n").alias("cons_n"))
     return (
-        pair.join(F.broadcast(ia), "ant")
-        .join(F.broadcast(ic), "cons")
+        pair.join(ia, "ant")
+        .join(ic, "cons")
         .select(
             "ant",
             "cons",
@@ -1526,7 +1526,7 @@ def a_event_transitions(spark, sf_dir):
         "from_type", F.col("event_type").alias("to_type")
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     outs = pairs.groupBy("from_type").agg(F.sum("n").cast("long").alias("out_n"))
-    return pairs.join(F.broadcast(outs), "from_type").select(
+    return pairs.join(outs, "from_type").select(
         "from_type",
         "to_type",
         "n",

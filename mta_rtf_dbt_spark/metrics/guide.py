@@ -104,7 +104,7 @@ cal AS (
           WHEN 7 THEN saturday END = 1
 ),
 trips_active AS (
-  SELECT /*+ BROADCAST(cal) */ t.trip_id, t.route_id, t.direction_id, t.service_id
+  SELECT t.trip_id, t.route_id, t.direction_id, t.service_id
   FROM {trips} t JOIN cal ON cal.service_id = t.service_id
 ),
 first_stop AS (
@@ -114,7 +114,7 @@ first_stop AS (
 sched AS (
   -- J7/D6: the guide joins st.stop_sequence = CAST(min_seq AS STRING) — dlt
   -- may land stop_sequence as string; compare as strings on both sides.
-  SELECT /*+ BROADCAST(fs) */ ta.route_id, ta.direction_id, ta.trip_id,
+  SELECT ta.route_id, ta.direction_id, ta.trip_id,
     """ + _gtfs_ts("st.departure_time") + """ AS sched_departure_ts
   FROM trips_active ta
   JOIN first_stop fs ON fs.trip_id = ta.trip_id
@@ -323,7 +323,7 @@ def m7_run_time(models, stop_a: str, stop_b: str) -> DataFrame:
 # --- M8 (metrics_guide.md:240-275) -----------------------------------------
 M8_SQL = """
 WITH sched AS (
-  SELECT /*+ BROADCAST(t) */ route_id, direction_id, trip_id,
+  SELECT route_id, direction_id, trip_id,
     """ + _gtfs_ts("departure_time") + """ AS sched_departure_ts
   FROM {stop_times} st JOIN {trips} t USING (trip_id)
   WHERE st.stop_id = :stop_ref
@@ -429,7 +429,7 @@ obs_hw AS (
   FROM obs
 ),
 sch AS (
-  SELECT /*+ BROADCAST(t) */ route_id, direction_id,
+  SELECT route_id, direction_id,
     """ + _gtfs_ts("departure_time") + """ AS sched_ts
   FROM {stop_times} st JOIN {trips} t USING (trip_id)
   WHERE st.stop_id = :stop_ref

@@ -144,6 +144,9 @@ def jaccard_group_graph(
             .filter(F.col("__df") >= max_posting)
             .select("shingle")
         )
+        # dedup_ngram_jaccard: hot's estimate is the shingle relation's
+        # size, so without it this plans as a sort-merge join whose two leaf
+        # stages both recompute the lazy sh persist.
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
     dl = sh.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("shingle")).alias("sl")
@@ -177,9 +180,11 @@ def jaccard_group_graph_sets(
     1.39/2.75 → 1.11/2.35 s min/median; sf3 (clone-dense, large hot list)
     8.98 → 7.48 s min."""
     # feeds the hot aggregate AND the capped-set projection. LAZY: the
-    # projection depends on the hot broadcast, so the hot stage
-    # materializes the cache first and the projection reads it — strictly
-    # ordered, the same rule as jaccard_group_graph's sh persist (r11).
+    # projection depends on the hot broadcast (a one-row aggregate, which
+    # Spark estimates at one row and so broadcasts at any threshold), so
+    # the hot stage materializes the cache first and the projection reads
+    # it — strictly ordered, the same rule as jaccard_group_graph's sh
+    # persist (r11).
     da = scoped_persist(shingle_sets(docs, n, text_col, id_col), "jaccard.da")
     if max_posting is not None:
         hot = (
@@ -194,7 +199,7 @@ def jaccard_group_graph_sets(
             )
         )
         dl = (
-            da.crossJoin(F.broadcast(hot))
+            da.crossJoin(hot)
             .select(
                 "doc_id",
                 F.sort_array(F.array_except("sl0", "__hot")).alias("sl"),
@@ -789,20 +794,17 @@ def simhash_bands(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     # whole-stage codegen for lambda eval), so per-instance hashing was
     # the entry's dominant cost; vocabulary is smaller than the instance
     # stream by orders of magnitude in ANY corpus (zipf), so the poly
-    # hash runs once per vocab word and the instance stream broadcast-
-    # joins a single extra long (``hb``). The 64 parity contributions
-    # stay INSIDE the map-side-combined aggregate exactly as before —
-    # materializing them as 64 join columns was measured 1.6x SLOWER at
-    # sf0.1 (wide rows through the join defeat the narrow broadcast).
-    # Broadcast is explicit: a vocab bigger than the broadcast ceiling
-    # means hashing it is cheap relative to the instance scan anyway, so
-    # the fallback would be to drop .distinct(), not to shuffle-join on
-    # a low-cardinality skewed key. Per-doc sums are unchanged integers
-    # -> signatures bit-identical.
+    # hash runs once per vocab word and the instance stream joins a
+    # single extra long (``hb``). The 64 parity contributions stay INSIDE
+    # the map-side-combined aggregate exactly as before — materializing
+    # them as 64 join columns was measured 1.6x SLOWER at sf0.1 (wide
+    # rows through the join defeat the narrow broadcast). Spark chooses
+    # broadcast or shuffle for the vocab join by its size threshold.
+    # Per-doc sums are unchanged integers -> signatures bit-identical.
     vocab = (
         toks.select("tok").distinct().withColumn("hb", _poly_hash_col(F.col("tok")))
     )
-    toks = toks.join(F.broadcast(vocab), "tok").select("doc_id", "hb")
+    toks = toks.join(vocab, "tok").select("doc_id", "hb")
     # expr-string forms: identical trees, one Py4J round trip per column
     # instead of per operator (see minhash_signatures' build-cost note)
     seeds = _minhash_seeds(64)

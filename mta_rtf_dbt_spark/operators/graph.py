@@ -599,7 +599,7 @@ def pagerank(
         )
         ranks = (
             nd.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
+            .crossJoin(dangling)
             .select(
                 "node",
                 "od",
@@ -976,6 +976,7 @@ def _edge_triangles(pairs: DataFrame, n_edges: int | None = None) -> DataFrame:
     # tiny aggregate; same lesson as the r11 n_nodes ReusedExchange note).
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
+    # graph_triangles: without it a sort-merge join replaces the broadcast join.
     if est_bytes <= ADJ_BROADCAST_MAX:
         du, dv = F.broadcast(du), F.broadcast(dv)
     lower_first = F.expr("du < dv OR (du = dv AND u < v)")
@@ -1002,6 +1003,7 @@ def _edge_triangles(pairs: DataFrame, n_edges: int | None = None) -> DataFrame:
         "tri.adj",
         eager=est_bytes > ADJ_BROADCAST_MAX,
     )
+    # graph_triangles: without it a sort-merge join replaces the broadcast join.
     if est_bytes <= ADJ_BROADCAST_MAX:
         av = F.broadcast(adj)
     else:

@@ -94,13 +94,11 @@ def retract_agg_state(
         F.count(value).alias("dn"), F.sum(value).alias("dsum")
     )
     ext = (
-        survivors.join(F.broadcast(dstate.select(*keys)), keys, "left_semi")
+        survivors.join(dstate.select(*keys), keys, "left_semi")
         .groupBy(*keys)
         .agg(F.min(value).alias("rmin"), F.max(value).alias("rmax"))
     )
-    adj = state.join(F.broadcast(dstate), keys, "left").join(
-        F.broadcast(ext), keys, "left"
-    )
+    adj = state.join(dstate, keys, "left").join(ext, keys, "left")
     affected = F.col("dn").isNotNull()
     return adj.select(
         *keys,
@@ -199,8 +197,8 @@ def incremental_join_delta(
     full-history A⋈B shuffle is paid once at bootstrap and never again."""
     return (
         a_delta.join(b_old, cond)
-        .unionByName(a_old.join(F.broadcast(b_delta), cond))
-        .unionByName(a_delta.join(F.broadcast(b_delta), cond))
+        .unionByName(a_old.join(b_delta, cond))
+        .unionByName(a_delta.join(b_delta, cond))
     )
 
 

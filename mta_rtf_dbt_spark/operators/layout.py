@@ -65,7 +65,7 @@ def zorder_key(
         F.min(coly).cast("long").alias("min_y"),
         F.max(coly).cast("long").alias("max_y"),
     )
-    g = df.crossJoin(F.broadcast(bounds))
+    g = df.crossJoin(bounds)
     bx = F.expr(
         f"CAST(((CAST({colx} AS BIGINT) - min_x) * {n}) div (max_x - min_x + 1) AS BIGINT)"
     ).alias("bx")
@@ -74,23 +74,6 @@ def zorder_key(
     ).alias("by")
     g = g.select(*df.columns, bx, by)
     return g.select(*g.columns, interleave_bits(F.col("bx"), F.col("by"), bits).alias("zval"))
-
-
-def write_zordered(
-    df: DataFrame, path: str, colx: str, coly: str, n_files: int = 64
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered on the z-curve
-    over (colx, coly): range-partition on zval, sort inside each partition,
-    drop the helper columns. Each file's (colx, coly) min/max footer stats
-    then cover one tile — predicates on EITHER column prune files."""
-    keyed = zorder_key(df, colx, coly)
-    (
-        keyed.repartitionByRange(n_files, "zval")
-        .sortWithinPartitions("zval")
-        .drop("bx", "by", "zval")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 @q(

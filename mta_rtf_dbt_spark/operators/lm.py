@@ -87,7 +87,7 @@ def unigram_model(docs: DataFrame) -> DataFrame:
         F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("v_size")
     )
     return (
-        freq.crossJoin(F.broadcast(totals))
+        freq.crossJoin(totals)
         .select(
             "token",
             "c",
@@ -204,7 +204,7 @@ def lm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the global rank over per-doc scores uses the two-phase prefix
     sum (range buckets over broadcast min/max of the score, per-bucket
-    row_number, broadcast bucket offsets ordered score-descending) — the
+    row_number, bucket offsets ordered score-descending) — the
     score relation is doc-count-sized, but at corpus scale that is still
     billions of rows, so no single-partition sort here either."""
     from pyspark.sql import Window
@@ -218,7 +218,7 @@ def lm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = scored.agg(
         F.min("avg_micro_lp").alias("lo"), F.max("avg_micro_lp").alias("hi")
     )
-    pre = scored.crossJoin(F.broadcast(bounds)).withColumn(
+    pre = scored.crossJoin(bounds).withColumn(
         "pbucket",
         F.expr(f"(avg_micro_lp - lo) * {nb} div (hi - lo + 1)"),
     )
@@ -243,7 +243,7 @@ def lm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.sum("bn").over(Window.partitionBy()))
         .select("pbucket", "boffset", "n")
     )
-    ranked = local.join(F.broadcast(offs), "pbucket").withColumn(
+    ranked = local.join(offs, "pbucket").withColumn(
         "rn", F.col("boffset") + F.col("lrn")
     )
     bucket = (
@@ -320,9 +320,9 @@ def lm_vocab_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0 = t.filter(F.col("slice") == 0).select(F.col("total").alias("total0"))
     t1 = t.filter(F.col("slice") == 1).select(F.col("total").alias("total1"))
     terms = (
-        grid.crossJoin(F.broadcast(v))
-        .crossJoin(F.broadcast(t0))
-        .crossJoin(F.broadcast(t1))
+        grid.crossJoin(v)
+        .crossJoin(t0)
+        .crossJoin(t1)
         .select(
             "n0",
             "n1",

@@ -62,6 +62,7 @@ def merge_into(
     single full-outer sort-merge join on the merge keys.
     """
     t = target.alias("t")
+    # mta_stream_fts: without it a sort-merge join replaces the broadcast join.
     s = (F.broadcast(source) if broadcast_source else source).alias("s")
     cond = None
     for k in on:

@@ -425,7 +425,7 @@ def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w_micro").cast("long").alias("w_total"),
         F.max("rate_scaled").cast("long").alias("peak"),
     )
-    rates = scaled.crossJoin(F.broadcast(tot)).select(
+    rates = scaled.crossJoin(tot).select(
         "source",
         "n_docs",
         F.expr("CAST((w_micro * 1000000) div w_total AS BIGINT)").alias("share_ppm"),
@@ -437,7 +437,7 @@ def mix_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         lcg_bucket(F.col("doc_id"), 1_000_000, seed=23) < F.col("keep_ppm"), 1
     ).otherwise(0)
     return (
-        docs.join(F.broadcast(rates), "source")
+        docs.join(rates, "source")
         .groupBy("source", "n_docs", "share_ppm", "keep_ppm")
         .agg(F.sum(kept).cast("long").alias("n_kept"))
     )

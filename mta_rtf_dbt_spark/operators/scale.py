@@ -123,14 +123,6 @@ def replicated_skew_join(
     return out.drop("__salt")
 
 
-def table_stats(spark: SparkSession, table: str, columns: list[str] | None = None) -> None:
-    """Collect CBO statistics (row counts + column NDV/min/max) so Catalyst's
-    cost-based join reordering has real cardinalities — the 100 TB equivalent
-    of the reference relying on BigQuery's automatic stats."""
-    cols = f" FOR COLUMNS {', '.join(columns)}" if columns else ""
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS{cols}")
-
-
 # ---------------------------------------------------------------------------
 # Driver entries (r4): salting is semantics-preserving, so both techniques
 # are oracle-checkable — the salted plan must produce EXACTLY the rows of
@@ -209,7 +201,7 @@ def skew_report(
     totals = counts.agg(F.sum("cnt").alias("total"))
     target = F.expr(f"greatest(total div {n_partitions}, 1L)")
     return (
-        counts.crossJoin(F.broadcast(totals))
+        counts.crossJoin(totals)
         .select(
             key,
             "cnt",

@@ -91,6 +91,9 @@ def scd2_apply_batch(
     current = history.filter(F.col("is_current"))
     closed_history = history.filter(~F.col("is_current"))
 
+    # No registry entry reaches this join, but the hint applies: the filters
+    # on its output turn branches of it into left outer joins, whose
+    # broadcast tests/test_scd2.py::test_scd2_apply_plan_broadcasts_batch pins.
     joined = current.join(F.broadcast(latest), keys, "full_outer")
     # existing current rows: close if superseded by a DIFFERENT value
     superseded = F.col("__chg_val").isNotNull() & F.col("valid_from").isNotNull() & (

@@ -114,7 +114,7 @@ def shard_plan(
         .select("bucket", "boffset")
     )
     return (
-        local.join(F.broadcast(boff), "bucket")
+        local.join(boff, "bucket")
         .select(
             "doc_id",
             "shuffle_key",

@@ -60,6 +60,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k: broadcast queries against one corpus scan."""
     corpus = spread(corpus)  # vector math is CPU-bound; spread a skinny scan
+    # knn_brute_force_cosine: the query side is a filter of the corpus, so
+    # Spark estimates it at the corpus size; past the threshold the cross
+    # join would plan as a CartesianProduct.
     qd = F.broadcast(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     )
@@ -180,8 +183,8 @@ def ann_lsh_topk(
 
     ``queries_in_corpus``: when every query row also appears in the corpus
     under the same id (the "search the corpus from within" shape), query
-    signatures are sliced from the corpus signature relation by a broadcast
-    id-join instead of recomputed — halving signature work.
+    signatures are sliced from the corpus signature relation by an id-join
+    instead of recomputed — halving signature work.
 
     ``stages_out``: pass a dict to receive the ``signatures`` and
     ``candidates`` intermediates — bench.py uses this for per-phase wall
@@ -194,11 +197,13 @@ def ann_lsh_topk(
         # same sharing, one fewer materialization job.
         sigs = scoped_persist(sigs, "ann_lsh.corpus_sigs")
         qids = queries.select(F.col(id_col).alias("vid"))
-        qs = sigs.join(F.broadcast(qids), "vid").withColumnRenamed("vid", "query_id")
+        qs = sigs.join(qids, "vid").withColumnRenamed("vid", "query_id")
     else:
         qs = lsh_signatures(queries, id_col, vec_col).withColumnRenamed("vid", "query_id")
     cs = sigs.withColumnRenamed("vid", "neighbor_id")
     cands = (
+        # ann_lsh_cosine: the lazy sigs persist above relies on this
+        # broadcast stage running before the probe side.
         F.broadcast(qs)
         .join(cs, ["band", "band_sig"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -213,7 +218,7 @@ def ann_lsh_topk(
     sim = F.round(V.cosine(F.col("cv"), F.col("qv")), 6)
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
-        cands.join(F.broadcast(qv), "query_id")
+        cands.join(qv, "query_id")
         .join(cv, "neighbor_id")
         .select("query_id", "neighbor_id", sim.alias("sim"))
         .withColumn("rn", F.row_number().over(w))
@@ -600,6 +605,8 @@ def int8_rerank_topk(
         F.col("qvec"), F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long") * x
     )
     sided = q8.withColumn("qq", qq)
+    # ann_int8_rerank: n_queries rows, estimated at the corpus size; without
+    # it the cross join plans as a CartesianProduct past the threshold.
     qs = F.broadcast(
         sided.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"),
@@ -741,6 +748,8 @@ def ivf_fit(
         # cosine on unit-agnostic data: use negative dot/(|v||c|) distance
         sim = F.try_divide(d, V.norm(F.col("v")) * V.norm(F.col("cv")))
         assigned = (
+            # ann_ivf_cosine: without it the plan's shuffle exchanges change,
+            # and past the threshold the cross join plans as a CartesianProduct.
             v.crossJoin(F.broadcast(cent))
             .groupBy("vid")
             .agg(
@@ -766,6 +775,8 @@ def ivf_topk(
 ) -> DataFrame:
     """Probe the nprobe nearest lists per query; exact cosine only within
     those lists. Scan cost drops to ~nprobe/n_lists of brute force."""
+    # ann_ivf_cosine: both cross joins below plan as CartesianProducts
+    # without it once the centroids' estimate passes the threshold.
     cent = F.broadcast(centroids)
     sim_c = F.try_divide(
         V.dot(F.col("v"), F.col("cv")), V.norm(F.col("v")) * V.norm(F.col("cv"))
@@ -788,6 +799,7 @@ def ivf_topk(
     sim = F.round(V.cosine(F.col("cv_corpus"), F.col("qv")), 6)
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
+        # ann_ivf_cosine: without it a sort-merge join replaces the broadcast join.
         F.broadcast(query_probes)
         .join(corpus_assigned, "list_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))

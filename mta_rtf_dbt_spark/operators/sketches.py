@@ -78,7 +78,7 @@ def heavy_hitters_exact(
     total = df.agg(F.count(F.lit(1)).alias("__total"))
     counts = df.groupBy(*keys, item_col).agg(F.count(F.lit(1)).alias("item_count"))
     return (
-        counts.crossJoin(F.broadcast(total))
+        counts.crossJoin(total)
         .filter(F.col("item_count") > F.col("__total") * support)
         .select(
             *keys,
@@ -536,6 +536,8 @@ def a_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     mins = _kmv_mins(e, ["event_type"], "user_id")
     a = mins.select(F.col("event_type").alias("type_a"), F.col("mins").alias("ma"))
     b = mins.select(F.col("event_type").alias("type_b"), F.col("mins").alias("mb"))
+    # a_kmv_setops: a theta join; past the threshold it would plan as a
+    # CartesianProduct.
     pairs = a.join(F.broadcast(b), F.col("type_a") < F.col("type_b"))
     u = F.slice(F.sort_array(F.array_distinct(F.concat("ma", "mb"))), 1, KMV_K)
     pairs = pairs.select("type_a", "type_b", "ma", "mb", u.alias("u"))

@@ -137,9 +137,7 @@ def _contamination_finish(
 ) -> DataFrame:
     return (
         common.join(
-            F.broadcast(
-                test_cnt.select(F.col("doc_id").alias("test_doc"), "n_test")
-            ),
+            test_cnt.select(F.col("doc_id").alias("test_doc"), "n_test"),
             "test_doc",
         )
         .select(
@@ -247,7 +245,7 @@ def bloom_screen(
         .select("doc_id", "hb", F.explode(pos_arr).alias("pos"))
     )
     hit_shingles = (
-        probe.join(F.broadcast(bits), "pos", "left_semi")
+        probe.join(bits, "pos", "left_semi")
         .groupBy("doc_id", "hb")
         .agg(F.count(F.lit(1)).alias("n_set"))
         .filter(F.col("n_set") == _BLOOM_K)
@@ -434,7 +432,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         tf.join(dfreq, "token")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .withColumn(
             "score_micro",
             F.round(
@@ -516,7 +514,7 @@ def pack_sequences(
         ),
     ).select("bucket", "boffset")
     return (
-        local.join(F.broadcast(boff), "bucket")
+        local.join(boff, "bucket")
         .select(
             "doc_id",
             "n_tokens",
@@ -913,18 +911,18 @@ def gdpr_erasure_audit(spark, sf_dir):
     the cascade deleted exactly the listed lineage in both relations —
     no stragglers, no over-deletion.
 
-    Scale: the takedown list is broadcast (legal-hold lists are
-    KB-to-MB); each relation is one broadcast anti-join — no shuffle of
-    the corpus. On a partitioned lakehouse table the rewrite touches only
-    files whose min/max doc_id span a listed id; the audit aggregates are
-    one pass each. The retraction twin for derived AGGREGATES is
-    operators/incremental.retract_agg_state (count/sum subtract; min/max
-    recompute only affected keys)."""
+    Scale: legal-hold lists are KB-to-MB, so each relation is one
+    anti-join that Spark broadcasts while the list's estimate is under its
+    size threshold (and shuffles past it). On a partitioned lakehouse
+    table the rewrite touches only files whose min/max doc_id span a
+    listed id; the audit aggregates are one pass each. The retraction twin
+    for derived AGGREGATES is operators/incremental.retract_agg_state
+    (count/sum subtract; min/max recompute only affected keys)."""
     docs = load(spark, sf_dir, "documents")
     takedown = docs.filter(F.col("doc_id") % 101 == 13).select("doc_id")
 
     def audit(name: str, df: DataFrame) -> DataFrame:
-        after = df.join(F.broadcast(takedown), "doc_id", "left_anti")
+        after = df.join(takedown, "doc_id", "left_anti")
         b = df.agg(F.count(F.lit(1)).alias("rows_before"))
         a = after.agg(F.count(F.lit(1)).alias("rows_after"))
         return b.crossJoin(a).select(
@@ -986,7 +984,7 @@ def text_bm25_topk(spark, sf_dir):
 
     Scale: one token explode feeding doc-length and query-term tf aggs
     (query terms filter BEFORE the tf agg — the posting list of 3 terms,
-    not the corpus vocabulary); idf and the corpus scalars are broadcast;
+    not the corpus vocabulary); the corpus scalars are one-row broadcasts;
     top-k is TakeOrdered, no global sort."""
     docs = load(spark, sf_dir, "documents")
     tk = spread(docs).select(
@@ -1006,7 +1004,7 @@ def text_bm25_topk(spark, sf_dir):
     idf = (
         tfq.groupBy("token")
         .agg(F.countDistinct("doc_id").cast("long").alias("df_docs"))
-        .crossJoin(F.broadcast(corpus))
+        .crossJoin(corpus)
         .select(
             "token",
             F.round(
@@ -1022,9 +1020,9 @@ def text_bm25_topk(spark, sf_dir):
         )
     )
     scored = (
-        tfq.join(F.broadcast(idf), "token")
+        tfq.join(idf, "token")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(corpus))
+        .crossJoin(corpus)
         .withColumn("dl_norm_milli", F.expr("(dl * 1000000) div avgdl_milli"))
         .withColumn(
             "s",

@@ -66,7 +66,7 @@ def encode_words(docs: DataFrame, vocab: DataFrame, text_col: str = "text") -> D
     words = spread(docs).select(
         "doc_id", F.posexplode(T.tokens(T.normalize(F.col(text_col)))).alias("pos", "token")
     ).filter(F.col("token") != "")
-    joined = words.join(F.broadcast(vocab.select("token", "token_id")), "token", "left")
+    joined = words.join(vocab.select("token", "token_id"), "token", "left")
     return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum(F.when(F.col("token_id").isNull(), 1).otherwise(0)).alias("n_oov"),

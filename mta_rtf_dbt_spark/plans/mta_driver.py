@@ -297,7 +297,7 @@ def mta_fts_insert_overwrite(spark, sf_dir):
         .distinct()
     )
     full = fact_trips_stops(src).withColumn("_p_date", pcol)
-    rebuild = full.join(F.broadcast(delta_dates), "_p_date", "left_semi")
+    rebuild = full.join(delta_dates, "_p_date", "left_semi")
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

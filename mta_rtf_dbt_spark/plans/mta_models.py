@@ -36,13 +36,18 @@ relies on it: ASC → NULLS FIRST, DESC → NULLS LAST, and the explicit
 CASE-WHEN-null prefix (fact_trips.sql:44-47,52-55) forces nulls-last for the
 terminal-stop argmin/argmax — as null-flag fields leading a struct key.
 
-Scale posture: fact_trips_stops is one fact-fact shuffle join (tu×stu on
-tu_id) plus two broadcast dim joins; fact_trips is a single hash aggregate on
-trip_uid (min_by/max_by — map-side combinable, no sort, no array
-materialization) plus two broadcast joins; fact_alerts pre-aggregates each
-child then broadcast-left-joins. All views stay lazy (dbt
-materialized='view'); ``materialize`` writes partitioned parquet for the
-reference's production hint (metrics_guide.md:385).
+Scale posture: fact_trips_stops is one fact-fact join (tu×stu on tu_id)
+plus two dim joins; fact_trips is a single hash aggregate on trip_uid
+(min_by/max_by — map-side combinable, no sort, no array materialization)
+plus two dim joins; fact_alerts pre-aggregates each child, then left-joins
+it. Like the reference's SQL, the bodies carry no join hints: Spark
+broadcasts each side whose size estimate is under
+``spark.sql.autoBroadcastJoinThreshold`` and shuffles the rest, and AQE
+re-plans from the sizes of the finished stages. At fixture scale every dim
+and child side is broadcast; at 100 TB the fact-fact join shuffles. All
+views stay lazy (dbt materialized='view'); ``materialize`` writes
+partitioned parquet for the reference's production hint
+(metrics_guide.md:385).
 """
 
 from __future__ import annotations
@@ -86,7 +91,7 @@ FROM (
            coalesce(rt_origin_code_hundredths, rt_trip_id, 'UNK')) AS trip_uid_text,
     coalesce(arrival_ts_utc, departure_ts_utc) AS event_ts_utc
   FROM (
-    SELECT /*+ BROADCAST(s, t) */
+    SELECT
       tu._dlt_id AS tu_id,
       stu._dlt_id AS stu_id,
       tu.as_of,
@@ -153,7 +158,7 @@ def fact_trips_stops(src: dict[str, DataFrame]) -> DataFrame:
 #     nulls first / DESC nulls last), since the reference omits the CASE
 #     prefix there — a faithful quirk.
 FACT_TRIPS_SQL = """
-SELECT /*+ BROADCAST(fs, ls) */
+SELECT
   agg.*,
   fs.stop_name AS first_stop_name,
   fs.parent_station AS first_parent_station,
@@ -251,7 +256,7 @@ def fact_delays(src: dict[str, DataFrame]) -> DataFrame:
 # fact_alerts
 # ---------------------------------------------------------------------------
 FACT_ALERTS_SQL = """
-SELECT /*+ BROADCAST(hdr, dsc, ap, i, s, r) */
+SELECT
   b.feed, b.entity_id, b.as_of, b.alert_id,
   hdr.header_text, dsc.description_text,
   ap.first_start_ts_utc, ap.last_end_ts_utc,
@@ -295,7 +300,7 @@ LEFT JOIN {routes} r ON r.route_id = i.route_id
 
 def fact_alerts(src: dict[str, DataFrame]) -> DataFrame:
     """Alert fact: aggregate each dlt child to alert grain, then a left-join
-    star (fact_alerts.sql:3-94). Children and dims are broadcast."""
+    star (fact_alerts.sql:3-94)."""
     return frame_sql(
         FACT_ALERTS_SQL,
         alerts=src["alerts"],

@@ -16,9 +16,9 @@ Determinism rules (so order-insensitive value hashes match bit-for-bit):
 - Every top-k / argmin has a unique tiebreaker column (D5).
 
 Scale notes are inline per query — these same plans are the ones we'd ship
-against 100 TB (broadcast hints on dims, banded self-join instead of a
-per-key cross product, map-side-combinable min_by/max_by instead of
-collect+sort).
+against 100 TB (dims broadcast by Spark's size threshold, banded self-join
+instead of a per-key cross product, map-side-combinable min_by/max_by
+instead of collect+sort).
 """
 
 from __future__ import annotations
@@ -198,14 +198,14 @@ def j1_inner_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j2_left_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 left dim lookup + J8 chained star (fact_trips_stops.sql:121-122,
-    fact_alerts.sql:87-93). Scale: explicit broadcast of the dims — zero
-    shuffle for the joins; only the final agg shuffles."""
+    fact_alerts.sql:87-93). Scale: the dims are under Spark's broadcast
+    threshold — zero shuffle for the joins; only the final agg shuffles."""
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey, "left")
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey, "left")
+        c.join(n, c.c_nationkey == n.n_nationkey, "left")
+        .join(r, n.n_regionkey == r.r_regionkey, "left")
         .groupBy(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
         .agg(
             F.count("*").alias("n_customers"),
@@ -275,8 +275,9 @@ def j3_join_preagg_child(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j4_dim_double_alias_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 double-aliased dim (fact_trips.sql:88-89: stops as fs/ls) + J8
-    multi-way star. Scale: one fact-fact shuffle (orders), everything else
-    broadcast; nation is broadcast twice under distinct aliases."""
+    multi-way star. Scale: one fact-fact shuffle (orders); Spark broadcasts
+    the dims, nation twice under distinct aliases, while they are under its
+    size threshold."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -289,10 +290,10 @@ def j4_dim_double_alias_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("cn.n_nationkey"))
-        .join(F.broadcast(sn), s.s_nationkey == F.col("sn.n_nationkey"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(cn, c.c_nationkey == F.col("cn.n_nationkey"))
+        .join(sn, s.s_nationkey == F.col("sn.n_nationkey"))
         .groupBy(
             F.col("cn.n_name").alias("cust_nation"), F.col("sn.n_name").alias("supp_nation")
         )
@@ -319,7 +320,7 @@ def j5_j7_using_cast_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     return (
         s.join(
-            F.broadcast(n),
+            n,
             s.s_nationkey.cast("string") == n.n_nationkey.cast("string"),
         )
         .groupBy(F.col("n_name").alias("nation_name"))
@@ -609,7 +610,7 @@ def a_histogram_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagree — the degenerate case lands deterministically in bucket 0."""
     e = load(spark, sf_dir, "events")
     bounds = e.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    g = e.crossJoin(F.broadcast(bounds))
+    g = e.crossJoin(bounds)
     span = F.nullif(F.col("hi") - F.col("lo"), F.lit(0.0))
     bucket = F.least(
         F.coalesce(
@@ -655,14 +656,14 @@ def a_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     same two-phase prefix sum the shard planner uses: phase 1 row_numbers
     WITHIN range-aligned value buckets (equi-width over broadcast min/max,
     so bucket ranges partition the global (value, event_id) order); phase 2
-    broadcasts per-bucket counts' running offsets (bucket-count rows, not
+    joins back per-bucket counts' running offsets (bucket-count rows, not
     corpus rows). The NTILE bucket is then pure integer arithmetic over the
     rank — written as ``div`` in both engines so the oracle's
     row_number-based formulation matches bit-for-bit."""
     e = load(spark, sf_dir, "events").select("event_id", "value")
     bounds = e.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
     nb = 64  # prefix-sum parallelism
-    g = e.crossJoin(F.broadcast(bounds))
+    g = e.crossJoin(bounds)
     span = F.nullif(F.col("hi") - F.col("lo"), F.lit(0.0))
     pre = g.select(
         "event_id",
@@ -690,7 +691,7 @@ def a_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pbucket", "boffset", "n")
     )
     ranked = (
-        local.join(F.broadcast(offs), "pbucket")
+        local.join(offs, "pbucket")
         .withColumn("rn", F.col("boffset") + F.col("lrn"))
         .withColumn("q", F.expr(f"n div {_N_DEPTH}"))
         .withColumn("r", F.col("n") % _N_DEPTH)
@@ -856,8 +857,8 @@ def a_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .rollup(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
         .agg(F.count("*").alias("n_customers"))
     )
@@ -1580,7 +1581,7 @@ def a_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         digits.groupBy(F.col("d").cast("long").alias("first_digit"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_values"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "first_digit",
             "n_values",

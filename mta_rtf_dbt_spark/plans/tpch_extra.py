@@ -11,8 +11,8 @@ Determinism follows relational.py's rules: money sums via DECIMAL, round(,6)
 on genuinely-float outputs, unique tiebreakers on every top-k.
 
 Scale posture (the plans we'd ship at 100 TB):
-- nation/region/supplier/customer are dimension-sided: broadcast them, never
-  shuffle the lineitem fact for a dim lookup.
+- nation/region/supplier/customer are dimension-sided: Spark broadcasts
+  them while they are under its size threshold and shuffles them past it.
 - Q18's HAVING-subquery is a self-semi-join on the already-aggregated child
   (shuffles |orders| grouped rows, not |lineitem|).
 - top-k = TakeOrderedAndProject (no global sort materialization).
@@ -66,7 +66,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
             F.sum(_dec(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
@@ -101,8 +101,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 analog: the cross-dimension residual (supplier nation ==
     customer nation) rides on the supplier equi-join. Scale: supplier,
-    customer, nation, region all broadcast; only the orders<->lineitem join
-    shuffles, on orderkey."""
+    customer, nation and region are broadcast while under Spark's size
+    threshold; the orders<->lineitem join shuffles on orderkey."""
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -114,13 +114,13 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .join(
-            F.broadcast(supp),
+            supp,
             (supp.s_suppkey == li.l_suppkey) & (supp.s_nationkey == cust.c_nationkey),
         )
-        .join(F.broadcast(nat), nat.n_nationkey == supp.s_nationkey)
-        .join(F.broadcast(reg), reg.r_regionkey == nat.n_regionkey)
+        .join(nat, nat.n_nationkey == supp.s_nationkey)
+        .join(reg, reg.r_regionkey == nat.n_regionkey)
         .groupBy("n_name")
         .agg(
             F.sum(_dec(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
@@ -153,8 +153,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 analog (the reference's fact_delays.sql:54 uses the same
     flag-filter-then-join shape). Scale: returnflag filter is pushed to the
-    lineitem scan; customer+nation broadcast; one shuffle on orderkey, one on
-    custkey for the agg."""
+    lineitem scan; customer+nation broadcast while under Spark's size
+    threshold; one shuffle on orderkey, one on custkey for the agg."""
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation")
     orders = load(spark, sf_dir, "orders").filter(
@@ -164,8 +164,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), nat.n_nationkey == cust.c_nationkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nat, nat.n_nationkey == cust.c_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
             F.sum(_dec(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
@@ -219,7 +219,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     return (
         big.join(orders, "o_orderkey")
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .select(
             "c_name",
             "c_custkey",
@@ -301,7 +301,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(18,4)"))
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .agg(
             F.round(
                 F.lit(100.0) * F.sum(promo).cast("double") / F.sum(rev).cast("double"), 6
@@ -332,7 +332,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     to lineitem) below the join; the residual OR evaluates post-join."""
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
-    j = li.join(F.broadcast(part), part.p_partkey == li.l_partkey)
+    j = li.join(part, part.p_partkey == li.l_partkey)
     b = lambda brand, smax, qlo, qhi: (  # noqa: E731
         (F.col("p_brand") == brand)
         & F.col("p_size").between(1, smax)
@@ -377,7 +377,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("c_custkey")
     )
     return (
-        cust.crossJoin(F.broadcast(avg_bal))
+        cust.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("__avg_bal"))
         .join(orders_keys, "c_custkey", "anti")
         .groupBy("c_nationkey")
@@ -472,11 +472,11 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        li.join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(
@@ -519,7 +519,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 analog: 8-way snowflake, share-of-total conditional
-    aggregate. Scale: part/supplier/customer/nation/region all broadcast;
+    aggregate. Scale: Spark broadcasts part/supplier/customer/nation/region
+    while they are under its size threshold;
     the two DECIMAL sums are exact so the final share is one IEEE division,
     rounded to 6dp on both engines (float-hash discipline)."""
     p = load(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
@@ -542,13 +543,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol = _dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     zero = F.lit(0).cast("decimal(18,4)")
     joined = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(r), F.col("n1_region") == F.col("r_regionkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n1, F.col("c_nationkey") == F.col("n1_key"))
+        .join(r, F.col("n1_region") == F.col("r_regionkey"))
+        .join(n2, F.col("s_nationkey") == F.col("n2_key"))
     )
     return (
         joined.select(F.year("o_orderdate").alias("o_year"), vol.alias("volume"), "nat")
@@ -635,7 +636,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = revenue.agg(F.max("rev_dec").alias("__mx"))
     s = load(spark, sf_dir, "supplier")
     return (
-        revenue.crossJoin(F.broadcast(mx))
+        revenue.crossJoin(mx)
         .filter(F.col("rev_dec") == F.col("__mx"))
         .join(s, F.col("s_suppkey") == F.col("supplier_no"))
         .select(
@@ -682,7 +683,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (0.5 * F.avg("l_quantity")).alias("half_avg_qty")
     )
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(pavg, li.l_partkey == F.col("pk"))
         .filter(F.col("l_quantity") < F.col("half_avg_qty"))
         .agg(
@@ -727,8 +728,8 @@ _PROFIT_SQL = (
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 analog (no partsupp in testdata — cost re-based on the part
     dim, see module comment). Scale: the LIKE filter prunes the part dim
-    BEFORE its broadcast, so the fact scan only keeps matching partkeys;
-    supplier/nation broadcast; the one real shuffle is lineitem x orders on
+    BEFORE its join, so the fact scan only keeps matching partkeys; Spark
+    broadcasts the dims by its size threshold; lineitem x orders shuffles on
     orderkey; profit terms are per-row doubles cast to DECIMAL before the
     order-free sum (the money discipline)."""
     li = load(spark, sf_dir, "lineitem")
@@ -740,9 +741,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         0.6
     ) * F.col("p_retailprice") * F.col("l_quantity")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -806,7 +807,7 @@ def q21_sole_returner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cand.join(o, cand.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), cand.l_suppkey == s.s_suppkey)
+        .join(s, cand.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.col("numwait").desc(), F.col("s_name").asc())
@@ -856,8 +857,8 @@ def q21_sole_returner(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 analog (supply re-based on lineitem, see block comment).
     Scale: the offer aggregate shuffles lineitem ONCE on (partkey, suppkey);
-    the region-filtered supplier dim broadcasts into both the per-part min
-    and the final lookup, and the part filter broadcasts too — the
+    the region-filtered supplier dim joins into both the per-part min and
+    the final lookup (broadcast or shuffled by Spark's size threshold) — the
     correlated subquery never re-scans the fact. Costs stay DECIMAL until
     output so min_cost equality is exact in both engines."""
     li = load(spark, sf_dir, "lineitem")
@@ -871,11 +872,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (partkey, suppkey) exchange (r12, guide §3.2): every surviving output
     # row joins the filtered `p` anyway, and per-part aggregates (offer
     # cost, best min) depend only on that part's own lineitem rows, so the
-    # broadcast semi-join is exact while the offer aggregate shuffles only
+    # semi-join is exact while the offer aggregate shuffles only
     # matching lines. Interleaved A/B at sf0.1: 1.31/1.60 -> 0.74/0.95 s
     # (min/median), top-100 identical.
     li_f = li.join(
-        F.broadcast(p.select(F.col("p_partkey").alias("l_partkey"))),
+        p.select(F.col("p_partkey").alias("l_partkey")),
         "l_partkey",
         "left_semi",
     )
@@ -883,8 +884,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(_dec(F.col("l_extendedprice"))).alias("cost")
     )
     eu = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     # eu_offer feeds BOTH sides of the correlated-min equijoin. The initial
@@ -893,7 +894,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an eager scoped_persist here was tried in r11 and measured +0.2 s at
     # sf0.1 (a serialized cache materialization for a reuse AQE provides
     # for free) — deliberately left unpersisted.
-    eu_offer = offer.join(F.broadcast(eu), offer.l_suppkey == eu.s_suppkey)
+    eu_offer = offer.join(eu, offer.l_suppkey == eu.s_suppkey)
     best = eu_offer.groupBy(F.col("l_partkey").alias("bk")).agg(
         F.min("cost").alias("min_cost")
     )
@@ -902,7 +903,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             best,
             (eu_offer.l_partkey == F.col("bk")) & (F.col("cost") == F.col("min_cost")),
         )
-        .join(F.broadcast(p), eu_offer.l_partkey == p.p_partkey)
+        .join(p, eu_offer.l_partkey == p.p_partkey)
         .select(
             "s_acctbal",
             "s_name",
@@ -948,7 +949,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 analog. Scale: the value aggregate shuffles the fact once
-    on partkey after the broadcast dim filter; the scalar global total is a
+    on partkey after the dim filter join; the scalar global total is a
     second agg over the SAME persisted relation broadcast back as a 1-row
     join — no fact re-scan, no driver collect. The HAVING threshold is
     scale-free (value > 1.5x the mean part value, so it selects at every SF)
@@ -961,12 +962,12 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eu = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey")
     )
     val = scoped_persist(
-        li.join(F.broadcast(eu), li.l_suppkey == eu.s_suppkey)
+        li.join(eu, li.l_suppkey == eu.s_suppkey)
         .groupBy("l_partkey")
         .agg(
             F.sum(_dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
@@ -981,7 +982,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) * 2).alias("__n2"),
     )
     return (
-        val.join(F.broadcast(total))
+        val.join(total)
         .filter(F.col("part_value") * F.col("__n2") > F.col("__tot3"))
         .select("l_partkey", F.col("part_value").cast("double").alias("part_value"))
         .orderBy(F.col("part_value").desc(), F.col("l_partkey").asc())
@@ -1056,8 +1057,9 @@ def q12_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 analog (exclusion re-based, see block comment). Scale: the
     distinct pair set is one shuffle of two skinny fact columns; the flagged
-    suppliers are a broadcast LEFT ANTI (NOT IN with non-null keys); part
-    attrs broadcast-join; COUNT(DISTINCT) expands inside the one agg."""
+    suppliers are a LEFT ANTI (NOT IN with non-null keys) and part attrs a
+    semi-join, each broadcast while under Spark's size threshold;
+    COUNT(DISTINCT) expands inside the one agg."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#3")
@@ -1070,8 +1072,8 @@ def q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey")
     )
     # Filter BEFORE the distinct exchange (r12, guide §3.2): both predicates
-    # are per-row on the pair's own keys (selective part attrs via broadcast
-    # semi-join, flagged suppliers via broadcast anti-join), so pushing them
+    # are per-row on the pair's own keys (selective part attrs via
+    # semi-join, flagged suppliers via anti-join), so pushing them
     # below the distinct keeps the distinct set identical restricted to
     # surviving pairs — the only pairs the query ever aggregates — while the
     # distinct shuffles a fraction of the fact. Interleaved A/B at sf0.1 in
@@ -1079,19 +1081,19 @@ def q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.select("l_partkey", "l_suppkey")
         .join(
-            F.broadcast(p.select(F.col("p_partkey").alias("l_partkey"))),
+            p.select(F.col("p_partkey").alias("l_partkey")),
             "l_partkey",
             "left_semi",
         )
         .join(
-            F.broadcast(flagged.select(F.col("s_suppkey").alias("l_suppkey"))),
+            flagged.select(F.col("s_suppkey").alias("l_suppkey")),
             "l_suppkey",
             "left_anti",
         )
     )
     ps = pairs.distinct()
     return (
-        ps.join(F.broadcast(p), ps.l_partkey == p.p_partkey)
+        ps.join(p, ps.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").cast("long").alias("supplier_cnt"))
         .orderBy(
@@ -1154,7 +1156,7 @@ def q20_concentrated_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier scan."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
-    widget_li = li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
+    widget_li = li.join(p.select("p_partkey"), li.l_partkey == F.col("p_partkey"))
     qall = widget_li.groupBy("l_partkey", "l_suppkey").agg(
         F.sum(_dec(F.col("l_quantity"))).alias("qa")
     )
@@ -1178,8 +1180,8 @@ def q20_concentrated_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .join(
             qualifying, s.s_suppkey == qualifying.qual_suppkey, "left_semi"
         )

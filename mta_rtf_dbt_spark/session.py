@@ -81,8 +81,13 @@ BUILD_CONFS: dict[str, str] = {
     ),
     # Arrow for pandas_udf / mapInPandas hot paths (operators/).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # 100 TB posture: generous broadcast ceiling for dimension tables; AQE will
-    # still runtime-convert larger-than-estimated sides back to shuffle joins.
+    # The engine's one broadcast policy: Spark broadcasts a join side whose
+    # size estimate is under this threshold, shuffles the rest, and AQE
+    # re-plans each join from the sizes its finished stages report. The
+    # package adds no per-join choice of its own beyond the few hints pinned
+    # in tests/test_plan_hygiene.py::KEPT_HINTS, each needed by a named
+    # entry's plan. 64m applies to sessions get_spark builds; the driver's
+    # session keeps Spark's 10m default (tests/test_vanilla_driver.py).
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.files.maxPartitionBytes": "256m",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",

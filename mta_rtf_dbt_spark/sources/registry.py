@@ -67,10 +67,6 @@ TESTDATA_TABLES = [
     "embeddings",
 ]
 
-# Small dimension tables a planner should always be willing to broadcast.
-BROADCAST_DIMS = {"region", "nation", "supplier", "part", "customer"}
-
-
 @lru_cache(maxsize=256)
 def _nanos_timestamp_cols(path: str, sig: Signature) -> tuple[str, ...]:
     """Parquet TIMESTAMP(NANOS) columns — Spark can't map them to
@@ -130,12 +126,19 @@ def _inferred(spark: SparkSession, path: str) -> DataFrame:
     TIMESTAMP(NANOS) columns are read as long nanos via
     ``spark.sql.legacy.parquet.nanosAsLong`` and truncated to micros with
     exact integer division (``div`` — nanos exceed 2^53, float math would
-    corrupt them), matching DuckDB's nanos->micros truncation.
+    corrupt them), matching DuckDB's nanos->micros truncation. The conf is
+    set only while the schema is resolved, then the caller's value comes
+    back: the resolved frame keeps its long columns either way.
     """
     ns_cols = _nanos_timestamp_cols(path, file_signature(path))
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(conf)
     if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+        spark.conf.set(conf, "true")
+    try:
+        df = spark.read.parquet(path)
+    finally:
+        spark.conf.set(conf, prior)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return _timestamps_as_ltz(df)

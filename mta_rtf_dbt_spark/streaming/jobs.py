@@ -181,15 +181,13 @@ def stream_static_enrich(spark, sf_dir):
     batch dimension per micro-batch (the GTFS-static enrichment pattern in
     streaming form). Distinct aggregates aren't allowed in streaming — the
     exact-distinct recipe is the dedup-then-count in windowed_actor_counts."""
-    from pyspark.sql.functions import broadcast
-
     from mta_rtf_dbt_spark.sources.registry import load
 
     src = stream_source(spark, sf_dir, "events")
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
-    enriched = src.join(broadcast(cust), "user_id")
+    enriched = src.join(cust, "user_id")
     agg = enriched.groupBy(F.col("c_nationkey").alias("nationkey")).agg(
         F.count("*").alias("n_events"),
         F.sum(F.round(F.col("value") * 1000, 0).cast("long")).alias("value_milli"),
@@ -448,7 +446,7 @@ def stream_heavy_hitters(spark, sf_dir):
     sink = run_to_memory(counts, "complete")
     total = sink.agg(F.sum("item_count").alias("__total"))
     return (
-        sink.join(F.broadcast(total))
+        sink.join(total)
         .filter(F.col("item_count") > F.col("__total") * 0.0005)
         .select(
             "event_type",

@@ -76,17 +76,17 @@ def test_append_into_a_partition_directory_gives_a_new_frame(spark, tmp_path):
 
 def test_rewritten_nanos_file_is_peeked_again(spark, tmp_path):
     """The TIMESTAMP(NANOS) footer peek is keyed on the file version: a file
-    rewritten with micros timestamps is not converted as nanos."""
+    rewritten with micros timestamps is not converted as nanos. Reading a
+    nanos file leaves the session's ``nanosAsLong`` as the caller set it."""
     path = os.path.join(tmp_path, "ticks.parquet")
     conf = "spark.sql.legacy.parquet.nanosAsLong"
-    old = spark.conf.get(conf)
-    try:
-        for unit, value in [("ns", 1_500_000_000_123_456_789), ("us", 1_600_000_000_000_001)]:
-            pq.write_table(pa.table({"ts": pa.array([value], pa.timestamp(unit))}), path)
-            got = _inferred(spark, path).selectExpr("unix_micros(ts)").first()[0]
-            assert got == (value // 1000 if unit == "ns" else value)
-    finally:
-        spark.conf.set(conf, old)
+    prior = spark.conf.get(conf)
+    for unit, value in [("ns", 1_500_000_000_123_456_789), ("us", 1_600_000_000_000_001)]:
+        pq.write_table(pa.table({"ts": pa.array([value], pa.timestamp(unit))}), path)
+        df = _inferred(spark, path)
+        assert spark.conf.get(conf) == prior
+        got = df.selectExpr("unix_micros(ts)").first()[0]
+        assert got == (value // 1000 if unit == "ns" else value)
 
 
 @pytest.mark.parametrize(
