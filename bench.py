@@ -1,7 +1,8 @@
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {name: sec, ...}, "cpus": ..., "default_parallelism": ...,
+"sf": ...}.
 
 Headliners cover each operator family at its most shuffle-heavy: the TPC-H-ish
 pricing summary, fact-fact join+agg, the window-dedup + lag pipeline, the
@@ -13,6 +14,16 @@ shared host's co-tenant load inflates single-shot timings ±30%, so one
 sample can't adjudicate a perf target); all raw reps ship in
 ``queries_runs`` beside the medians. ``$SPARK_GRAFT_CPUS`` defaults to the
 cores this process may run on.
+
+Attribution comes from Spark's own record of the jobs each rep ran. Every
+timed rep runs its build and its terminal count as two spans of
+``perfbench.spans.Tracer``, each under its own job group; after the reps one
+``collect`` reads the status store (kept with the UI off) and
+``bench_detail.json["ledger"]`` gets, per entry and per rep, the build and
+action seconds, jobs fired during the build (eager persists, probes, loop
+checkpoints) and in all, stages, tasks, executor run/CPU/GC seconds, and
+shuffle read/write and spill bytes. The warm-up pass and the two streaming
+sinks are not traced.
 """
 
 from __future__ import annotations
@@ -21,6 +32,50 @@ import json
 import os
 import sys
 import time
+
+
+def traced_rep(tr, name: str, fn, spark, sf_dir: str) -> float:
+    """One timed rep of a headline entry: the build and the terminal count
+    run as the ``build`` and ``action`` spans under a root span ``name``, so
+    the jobs fired while the plan is built are told apart from the action's.
+    Returns the rep's wall seconds."""
+    t0 = time.monotonic()
+    with tr.root(name):
+        df = tr.call("build", fn, spark, sf_dir)
+        tr.call("action", df.count)
+    return round(time.monotonic() - t0, 3)
+
+
+def ledger(tr) -> dict[str, list[dict]]:
+    """Per entry, one record per traced rep in rep order, from the spans of
+    ``tr`` after ``tr.collect()``."""
+    layers: dict[int, dict] = {}
+    for s in tr.spans:
+        if s.parent is not None:
+            layers.setdefault(s.parent, {})[s.name] = s
+    out: dict[str, list[dict]] = {}
+    for root in (s for s in tr.spans if s.parent is None):
+        build, action = layers[root.id]["build"], layers[root.id]["action"]
+        jobs = build.jobs + action.jobs
+
+        def total(key: str) -> int:
+            return sum(j[key] for j in jobs)
+
+        out.setdefault(root.name, []).append({
+            "build_s": round(build.dur, 3),
+            "action_s": round(action.dur, 3),
+            "jobs_in_build": len(build.jobs),
+            "jobs": len(jobs),
+            "stages": total("stages"),
+            "tasks": total("tasks"),
+            "run_s": round(total("run_ms") / 1e3, 3),
+            "cpu_s": round(total("cpu_ns") / 1e9, 3),
+            "gc_s": round(total("gc_ms") / 1e3, 3),
+            "shuffle_read_bytes": total("shuffle_read_bytes"),
+            "shuffle_write_bytes": total("shuffle_write_bytes"),
+            "spill_bytes": total("spill_bytes"),
+        })
+    return out
 
 
 def main() -> None:
@@ -39,6 +94,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from mta_rtf_dbt_spark.session import default_parallelism, pin_session
+    from perfbench.spans import Tracer
 
     cpus = str(default_parallelism())
 
@@ -52,6 +108,11 @@ def main() -> None:
             os.environ.get("SPARK_GRAFT_MAX_RESULT", "8g"),
         )
         .config("spark.ui.enabled", "false")
+        # the status store must keep every traced job and stage until the
+        # ledger is collected: warm-up plus 3 reps fire ~1 600 jobs at sf0.1,
+        # past the default of 1 000, which would drop rep 1 silently
+        .config("spark.ui.retainedJobs", "100000")
+        .config("spark.ui.retainedStages", "100000")
         .getOrCreate()
     )
     pin_session(spark)
@@ -153,98 +214,16 @@ def main() -> None:
     _REPS = 3
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {name: [] for name in headline if name in qs}
+    tr = Tracer(spark.sparkContext, True)
     for _ in range(_REPS):
         for name in headline:
             fn = qs.get(name)
             if fn is None:
                 continue
-            t0 = time.monotonic()
-            fn(spark, sf_dir).count()
-            runs[name].append(round(time.monotonic() - t0, 3))
+            runs[name].append(traced_rep(tr, name, fn, spark, sf_dir))
     for name, samples in runs.items():
         timings[name] = sorted(samples)[len(samples) // 2]
-
-    # --- per-stage attribution for the composite heavyweights (r3 verdict
-    # items 4/8: the fixed-overhead-vs-throughput split needs numbers). Each
-    # stage is persisted then counted in dependency order, so a stage's
-    # timing is its own incremental cost — downstream counts reuse the
-    # materialized prefix via Spark's canonical-subtree cache matching.
-    # Untimed relative to the headline suite (runs after, own section).
-    stage_times: dict[str, dict[str, float]] = {}
-
-    def timed(d: dict[str, float], key: str, action) -> None:
-        t0 = time.monotonic()
-        action()
-        d[key] = round(time.monotonic() - t0, 3)
-
-    from pyspark.sql import functions as F
-
-    from mta_rtf_dbt_spark.operators.dedup import minhash_lsh_stages
-    from mta_rtf_dbt_spark.operators.pipeline import curate
-    from mta_rtf_dbt_spark.operators.shard import shard_plan
-    from mta_rtf_dbt_spark.operators.similarity import ann_lsh_topk
-    from mta_rtf_dbt_spark.sources.registry import scoped_persist
-
-    docs = load(spark, sf_dir, "documents")
-
-    # curate() eagerly materializes its shared-fanout caches (dedup relation,
-    # contamination sides) at build time — time the build as its own stage so
-    # that cost is attributed, then each stage count is incremental on top.
-    d: dict[str, float] = {}
-    t0 = time.monotonic()
-    cur = curate(docs)
-    d["build_eager_caches"] = round(time.monotonic() - t0, 3)
-    for stage in ["quality", "deduped", "contaminated", "clean", "mixed"]:
-        timed(d, stage, scoped_persist(cur[stage], f"bench.curation.{stage}").count)
-    timed(d, "shard_plan", shard_plan(cur["mixed"]).count)
-    stage_times["corpus_curation_pipeline"] = d
-
-    # the stages() call itself pays the corpus scan + set-group collapse
-    # (eager group persist, r11 contraction) — time it as its own phase
-    d = {}
-    t0 = time.monotonic()
-    mh = minhash_lsh_stages(docs)
-    d["build_set_groups"] = round(time.monotonic() - t0, 3)
-    timed(d, "shingle_explode", mh["shingles"].count)
-    timed(d, "signatures", mh["signatures"].count)
-    timed(d, "band_candidates", scoped_persist(mh["candidates"], "bench.mh.cands").count)
-    timed(d, "exact_verify", mh["verified"].count)
-    stage_times["dedup_minhash_lsh"] = d
-
-    emb = load(spark, sf_dir, "embeddings")
-    ann_stages: dict = {}
-    d = {}
-    t0 = time.monotonic()
-    topk = ann_lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=5,
-        queries_in_corpus=True, stages_out=ann_stages,
-    )
-    # r11: the corpus signature cache is lazy (materializes under the
-    # band-candidates action), so this phase is plan-build time and the
-    # signature compute books under band_candidates below
-    d["signatures"] = round(time.monotonic() - t0, 3)
-    timed(d, "band_candidates", scoped_persist(ann_stages["candidates"], "bench.ann.cands").count)
-    timed(d, "exact_rerank_topk", topk.count)
-    stage_times["ann_lsh_cosine"] = d
-
-    # --- MTA model-chain stage attribution (r4 verdict item 8): the core
-    # model is persisted first, so each downstream stage's timing is its own
-    # incremental cost (rollup, delay slice, alerts star, metrics) — the
-    # cost profile a real deployment of the reference workload watches.
-    from mta_rtf_dbt_spark.metrics.guide import m5_headways, m6_dwell_times
-    from mta_rtf_dbt_spark.plans.mta_driver import _models
-    from mta_rtf_dbt_spark.plans.mta_oracle import DAY, STOP_A
-
-    models = _models(spark)
-    d = {}
-    timed(d, "fact_trips_stops",
-          scoped_persist(models["fact_trips_stops"], "bench.mta.fts").count)
-    timed(d, "fact_trips", models["fact_trips"].count)
-    timed(d, "fact_delays", models["fact_delays"].count)
-    timed(d, "fact_alerts", models["fact_alerts"].count)
-    timed(d, "m5_headways", m5_headways(models, STOP_A, DAY).count)
-    timed(d, "m6_dwell", m6_dwell_times(models).count)
-    stage_times["mta_model_chain"] = d
+    tr.collect()
 
     # --- streaming dedup-ingest sink (C4-style incremental corpus build):
     # availableNow pass of the documents table through the content-hash
@@ -281,6 +260,7 @@ def main() -> None:
         # testdata file into one (untimed setup)
         os.makedirs(f"{tmp}/incoming")
         shutil.copy(os.path.join(sf_dir, "documents.parquet"), f"{tmp}/incoming/")
+        docs = load(spark, sf_dir, "documents")
         stream = spark.readStream.schema(docs.schema).parquet(f"{tmp}/incoming")
 
         # median-of-3 for the sinks too — each rep drains into FRESH
@@ -328,8 +308,8 @@ def main() -> None:
     # the cap — r6 verdict item 2). The single stdout line therefore
     # carries ONLY what the judge needs — all medians + the total, compact
     # separators, "value" last so even a clipped tail keeps the headline —
-    # and the raw per-rep samples + stage attributions go to a sidecar
-    # file committed alongside (bench_detail.json).
+    # and the raw per-rep samples + the ledger go to a sidecar file
+    # committed alongside (bench_detail.json).
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
     )
@@ -344,13 +324,15 @@ def main() -> None:
                 "host_load": host_load,
                 "queries": timings,
                 "queries_runs": runs,
-                "stages": stage_times,
+                "ledger": ledger(tr),
+                "trace_overhead_s": round(tr.overhead_s, 3),
             },
             fh,
             indent=1,
         )
     # compact load signal for the stdout line: start/end 1-min loadavg only
     load_line = [host_load["loadavg_start"][0], host_load["loadavg_end"][0]]
+    par = spark.sparkContext.defaultParallelism
     line = json.dumps(
         {
             "metric": "headline_suite_total",
@@ -358,6 +340,8 @@ def main() -> None:
             "sf": sf_val,
             "timing_policy": "median_of_3_interleaved",
             "load1": load_line,
+            "cpus": int(cpus),
+            "default_parallelism": par,
             "detail": "bench_detail.json",
             "queries": timings,
             "value": total,
@@ -377,6 +361,8 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf_val,
                 "load1": load_line,
+                "cpus": int(cpus),
+                "default_parallelism": par,
                 "detail": "bench_detail.json",
                 "queries_in_detail_only": len(timings),
                 "value": total,

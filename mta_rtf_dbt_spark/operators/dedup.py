@@ -509,14 +509,11 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16) -> DataFrame:
     )
 
 
-def minhash_lsh_stages(
+def minhash_lsh_dedup(
     docs: DataFrame, threshold: float = 0.2, num_hashes: int = 64, bands: int = 16
-) -> dict[str, DataFrame]:
-    """The MinHash-LSH pipeline with every phase exposed (``shingles``,
-    ``groups``, ``signatures``, ``candidates``, ``verified``) so bench.py
-    can attribute wall time per phase (r3 verdict: the fixed-overhead claim
-    needs per-phase numbers). ``minhash_lsh_dedup`` is the production
-    composition of the same stages.
+) -> DataFrame:
+    """Candidates via LSH, then exact-Jaccard verification of candidates only
+    (the standard verify step — precision 1.0, recall set by the band curve).
 
     ENGINE-side set-group contraction (r11), mirroring the r9 oracle:
     signatures, band hashes, candidacy, and exact Jaccard depend only on a
@@ -531,19 +528,19 @@ def minhash_lsh_stages(
     single-host executor heap until a small broadcast build OOMed. At
     group level the same corpus is a few thousand signatures. The only
     corpus-wide work left is the shingle scan and one groupBy(doc) →
-    groupBy(set) cascade — both linear, both map-combinable.
+    groupBy(set) cascade — both linear, both map-combinable. At cluster
+    scale the group relation is the one staged intermediate (a
+    parquet/checkpoint write).
 
     The group relation (sorted distinct shingle set + member list) feeds
     five consumers in one job — persist it eagerly or concurrent stages
     race the cold cache and recompute the corpus scan per branch."""
-    sh = shingles(docs, 3)
     # Per-doc sets come straight from the shingling projection (r12):
     # sort_array(array_distinct(grams)) is element-identical to
     # re-collecting the exploded relation (collect_set over shingles()'s
     # per-doc-distinct stream), so the former explode -> groupBy(doc_id)
     # full-payload exchange is gone. There is NO hot cap on this path, so
-    # no posting pass needs the exploded form at all; `sh` stays in the
-    # returned dict purely as the bench's attribution handle.
+    # no posting pass needs the exploded form at all.
     dl = shingle_sets(docs, 3).select("doc_id", F.col("sl0").alias("sl"))
     # Signatures ride INSIDE the persisted group projection (r11): each
     # group already carries its sorted distinct shingle set ``sl``, so hash
@@ -639,25 +636,7 @@ def minhash_lsh_stages(
     )
     if thr_ppm > 1_000_000:
         intra = intra.filter(F.lit(False))
-    return {
-        "shingles": sh,
-        "groups": groups,
-        "signatures": gsigs,
-        "candidates": gcands,
-        "verified": cross.unionAll(intra),
-    }
-
-
-def minhash_lsh_dedup(
-    docs: DataFrame, threshold: float = 0.2, num_hashes: int = 64, bands: int = 16
-) -> DataFrame:
-    """Candidates via LSH, then exact-Jaccard verification of candidates only
-    (the standard verify step — precision 1.0, recall set by the band curve).
-    Set-group-contracted end to end since r11 (see ``minhash_lsh_stages``):
-    banding and verification run per distinct shingle set, clone groups
-    expand back to doc pairs afterward. At cluster scale the group relation
-    is the one staged intermediate (a parquet/checkpoint write)."""
-    return minhash_lsh_stages(docs, threshold, num_hashes, bands)["verified"]
+    return cross.unionAll(intra)
 
 
 def _minhash_lsh_sql(

@@ -176,7 +176,6 @@ def ann_lsh_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 5,
     id_col: str = "vec_id", vec_col: str = "embedding",
     queries_in_corpus: bool = False,
-    stages_out: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Candidates share >= 1 band signature with the query; exact cosine
     re-rank of the candidate set only.
@@ -184,11 +183,7 @@ def ann_lsh_topk(
     ``queries_in_corpus``: when every query row also appears in the corpus
     under the same id (the "search the corpus from within" shape), query
     signatures are sliced from the corpus signature relation by an id-join
-    instead of recomputed — halving signature work.
-
-    ``stages_out``: pass a dict to receive the ``signatures`` and
-    ``candidates`` intermediates — bench.py uses this for per-phase wall
-    time attribution (r3 verdict: the fixed-overhead claim needs numbers)."""
+    instead of recomputed — halving signature work."""
     sigs = lsh_signatures(spread(corpus), id_col, vec_col)
     if queries_in_corpus:
         # feeds both sides of the band join, but the probe side DEPENDS on
@@ -210,9 +205,6 @@ def ann_lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    if stages_out is not None:
-        stages_out["signatures"] = sigs
-        stages_out["candidates"] = cands
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
     sim = F.round(V.cosine(F.col("cv"), F.col("qv")), 6)
