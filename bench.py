@@ -8,7 +8,8 @@ Headliners cover each operator family at its most shuffle-heavy: the TPC-H-ish
 pricing summary, fact-fact join+agg, the window-dedup + lag pipeline, the
 percentile agg, plus the scale-path LLM ops (MinHash-LSH dedup, LSH ANN).
 Each query is timed to a terminal action (count) after a warm-up of the
-shared inputs' file listing; results are forced, not cached between runs.
+shared inputs' file listing; results are forced, and no cache outlives the
+entry that made it (``registry.q``), so every rep measures its entry alone.
 Per-entry numbers are the MEDIAN OF 3 independent reps (r5 verdict: the
 shared host's co-tenant load inflates single-shot timings ±30%, so one
 sample can't adjudicate a perf target); all raw reps ship in
@@ -207,10 +208,10 @@ def main() -> None:
     # minutes later ran faster than the previous round). Interleaving
     # makes each entry's three samples minutes apart, so a burst can
     # claim at most one of them and the median stays honest. Each rep
-    # rebuilds the plan from scratch — scoped_persist releases the
-    # previous rep's cache, and Spark reuses nothing across jobs except
-    # the OS page cache (warm for every rep equally, the steady state a
-    # real cluster sees).
+    # rebuilds the plan from scratch, and building an entry releases every
+    # cache the entry before it persisted, so no rep reads another's cache;
+    # what carries over is the OS page cache and the JVM's compiled code
+    # (warm for every rep equally, the steady state a real cluster sees).
     _REPS = 3
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {name: [] for name in headline if name in qs}

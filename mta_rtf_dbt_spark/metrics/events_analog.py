@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import bq
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load
 
 
 @q(
@@ -1016,7 +1016,7 @@ def a_mad_outliers(spark, sf_dir):
         "med",
         F.abs(F.col("value") - F.col("med")).alias("ad"),
     )
-    dev = scoped_persist(dev, "mad.dev", eager=True)
+    dev = persist(dev, eager=True)
     mad = dev.groupBy("event_type").agg(
         F.percentile(F.col("ad"), F.lit(0.5)).alias("mad")
     )

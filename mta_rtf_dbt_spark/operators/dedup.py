@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import text as T
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load, spread
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +136,7 @@ def jaccard_group_graph(
     # that stage populates this cache and the set build reads it; the stages
     # are strictly ordered, so there is no concurrent-recompute race and the
     # former eager count was one whole extra materialization pass.
-    sh = scoped_persist(sh, "jaccard.sh")
+    sh = persist(sh)
     if max_posting is not None:
         hot = (
             sh.groupBy("shingle")
@@ -185,7 +185,7 @@ def jaccard_group_graph_sets(
     # the hot stage materializes the cache first and the projection reads
     # it — strictly ordered, the same rule as jaccard_group_graph's sh
     # persist (r11).
-    da = scoped_persist(shingle_sets(docs, n, text_col, id_col), "jaccard.da")
+    da = persist(shingle_sets(docs, n, text_col, id_col))
     if max_posting is not None:
         hot = (
             da.select(F.explode("sl0").alias("shingle"))
@@ -223,10 +223,8 @@ def _group_graph_tail(
     # feeds the posting join (via sl), the expansion, and isolated-group
     # handling — one eager persist kills in-flight recompute of the corpus
     # scan + two shuffles behind it
-    groups = scoped_persist(
-        groups.select("gid", "docs", F.size("sl").alias("n"), "sl"),
-        "jaccard.groups",
-        eager=True,
+    groups = persist(
+        groups.select("gid", "docs", F.size("sl").alias("n"), "sl"), eager=True
     )
     gsh = groups.select("gid", "n", F.explode("sl").alias("shingle"))
     a, b = gsh.alias("a"), gsh.alias("b")
@@ -559,7 +557,7 @@ def minhash_lsh_dedup(
         f"array_min(transform(hb, h -> (h * {a}L + {b}L) % {MINHASH_P}L))"
         for (a, b) in seeds
     )
-    groups = scoped_persist(
+    groups = persist(
         dl.groupBy("sl")
         .agg(
             F.min("doc_id").alias("gid"),
@@ -573,7 +571,6 @@ def minhash_lsh_dedup(
             F.transform(F.col("sl"), _poly_hash_col).alias("hb"),
         )
         .selectExpr("gid", "docs", "sl", "n", f"array({mins}) AS minhash"),
-        "minhash.groups",
         eager=True,
     )
     gsigs = groups.select(F.col("gid").alias("doc_id"), "minhash")
@@ -823,7 +820,7 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) -> Da
     Hamming filters BEFORE the distinct, so the dedup shuffle carries only
     surviving pairs. The signature relation still persists: it feeds both
     sides of the self-join and the 64-sum aggregate must run once."""
-    sigs = scoped_persist(sigs, "simhash.sigs", eager=True)
+    sigs = persist(sigs, eager=True)
     band_cols = [f"band{b}" for b in range(N_SIMHASH_BANDS)]
     banded = sigs.select(
         "doc_id",
@@ -893,7 +890,7 @@ def simhash_group_pairs(
     # single subtree — populating this cache in the same job; the later
     # expansion branches then read it. One materialization job saved per
     # call with no concurrent-recompute window.
-    groups = scoped_persist(groups, "simhash.groups")
+    groups = persist(groups)
     sigs = simhash_bands(
         groups.select(F.col("gid").alias("doc_id"), F.col("__norm").alias("text"))
     )
@@ -1054,7 +1051,7 @@ def edit_distance_pairs(
 
         bfreq = F.count("*").over(Window.partitionBy("blk"))
         pre = pre.withColumn("__bf", bfreq).filter(F.col("__bf") < max_block).drop("__bf")
-    pre = scoped_persist(pre, "editdist.pre", eager=True)  # feeds both join sides
+    pre = persist(pre, eager=True)  # feeds both join sides
     a = pre.select(F.col("doc_id").alias("doc_a"), F.col("pre").alias("pa"), "blk")
     b = pre.select(F.col("doc_id").alias("doc_b"), F.col("pre").alias("pb"), "blk")
     return (

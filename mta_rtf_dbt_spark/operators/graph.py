@@ -33,8 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load
 
 
 def connected_components(
@@ -185,7 +185,7 @@ def connected_components_star(
     #
     # The undirected closure is ONE explode pass (r11) — the former
     # two-orientation union read `edges` through two subtrees, which
-    # forced an eager scoped_persist of the caller's whole edge pipeline
+    # forced an eager persist of the caller's whole edge pipeline
     # (the jaccard posting join) just to stop the second subtree
     # re-running it; with a single pass the pipeline executes exactly once
     # under und0's checkpoint and the extra cache + its materialization
@@ -378,8 +378,8 @@ _CC_CTES = _cc_star_cte_chain()
 # posting join -> jaccard edges -> 8 star rounds -> comp) and differ only in
 # the projection after it. Re-deriving that prefix per entry cost ~22 min
 # EACH at sf3 (rehearsal_sf3_cc_r8.json: 5,365 s for 4 entries) — pure
-# oracle resource burn, the engine side already shares its edge relation via
-# scoped_persist. The parity harness (tests/oracle_harness.py) materializes
+# oracle resource burn, the engine side already shares its edge relation
+# within an entry via persist. The parity harness (tests/oracle_harness.py) materializes
 # any declared prefix ONCE per (connection, sf_dir) as a temp table and
 # rewrites each entry's oracle to read the final CTE from it; labels are
 # deterministic so hashes are unchanged, and the in-chain fixpoint assertion
@@ -463,14 +463,13 @@ def doc_jaccard_components(
     # a lazy persist dedupes the whole groups-join-expansion subtree across
     # them at zero extra jobs (r11 — the keep_best after-plan had grown the
     # un-persisted expansion twice).
-    return scoped_persist(
+    return persist(
         groups.join(comp_g.withColumnRenamed("node", "gid"), "gid", "left")
         .filter(F.col("component").isNotNull() | (F.size("docs") >= 2))
         .select(
             F.explode("docs").alias("node"),
             F.coalesce("component", "gid").alias("component"),
-        ),
-        "jgg.comp",
+        )
     )
 
 
@@ -553,11 +552,10 @@ def pagerank(
     n_shuffle = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    e = scoped_persist(
+    e = persist(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .repartition(n_shuffle, "src"),
-        "pr.edges",
+        .repartition(n_shuffle, "src")
     )
     # One pass computes the node universe AND out-degrees together (r6 —
     # formerly a union-distinct plus a separate count agg, two shuffles):
@@ -851,9 +849,7 @@ _TRIANGLE_SQL = (
 )
 
 
-def _copurchase_pairs(
-    spark: SparkSession, sf_dir: str, scope: str, eager: bool = True
-) -> DataFrame:
+def _copurchase_pairs(spark: SparkSession, sf_dir: str, eager: bool = True) -> DataFrame:
     """Canonical (u < v) edge relation of the part co-purchase graph:
     parts sharing an order are linked. Per-order basket combos (r11):
     collect each order's sorted distinct part set with one map-combined
@@ -888,7 +884,7 @@ def _copurchase_pairs(
     pairs = (
         baskets.select(F.explode(combos).alias("c")).select("c.u", "c.v").distinct()
     )
-    return scoped_persist(pairs, scope, eager=eager)
+    return persist(pairs, eager=eager)
 
 
 def _degrees(pairs: DataFrame) -> DataFrame:
@@ -996,11 +992,8 @@ def _edge_triangles(pairs: DataFrame, n_edges: int | None = None) -> DataFrame:
     # former eager count was one whole extra materialization pass. The
     # shuffle-join fallback keeps the eager count: there both join sides
     # read the cache through genuinely concurrent stages.
-    adj = scoped_persist(
-        oriented.groupBy("src").agg(
-            F.sort_array(F.collect_list("dst")).alias("nb")
-        ),
-        "tri.adj",
+    adj = persist(
+        oriented.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nb")),
         eager=est_bytes > ADJ_BROADCAST_MAX,
     )
     # graph_triangles: without it a sort-merge join replaces the broadcast join.
@@ -1041,7 +1034,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     are counted per edge as the intersection size of the endpoints'
     degree-oriented out-neighborhoods — wedges never become rows, so the
     only wide shuffles are O(edges)."""
-    pairs = _copurchase_pairs(spark, sf_dir, "tri.pairs", eager=False)
+    pairs = _copurchase_pairs(spark, sf_dir, eager=False)
     # ONE fused stats pass (r12) replaces three jobs/branches: the eager
     # persist count, the n_edges crossJoin branch, and the n_nodes
     # countDistinct branch (whose union re-scanned the cache twice). The
@@ -1118,7 +1111,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex via a single explode of a concatenated struct array feeding the
     map-side-combined aggregate — O(edges + triangles) generated rows, no
     wedge relation, no branch re-execution."""
-    pairs = _copurchase_pairs(spark, sf_dir, "ccoef.pairs")
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = _degrees(pairs).select("node", F.col("deg").cast("long").alias("deg"))
     etri = _edge_triangles(pairs).filter(F.size("zs") > 0)
     t = F.size("zs").cast("long")

@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import text as T
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load, spread
 
 _ARR_SQL = (
     "list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),"
@@ -213,7 +213,7 @@ def lm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = lm_score(docs, unigram_model(docs)).select(
         "doc_id", "n_tokens", "avg_micro_lp"
     )
-    scored = scoped_persist(scored, "ccnet.scored", eager=True)
+    scored = persist(scored, eager=True)
     nb = 64
     bounds = scored.agg(
         F.min("avg_micro_lp").alias("lo"), F.max("avg_micro_lp").alias("hi")
@@ -310,7 +310,7 @@ def lm_vocab_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(T.tokens(T.normalize(F.col("text")))).alias("token"),
     )
     c = tok.groupBy("slice", "token").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    c = scoped_persist(c, "drift.counts", eager=True)
+    c = persist(c, eager=True)
     v = c.agg(F.countDistinct("token").cast("long").alias("vsize"))
     t = c.groupBy("slice").agg(F.sum("n").cast("long").alias("total"))
     grid = c.groupBy("token").agg(

@@ -346,7 +346,7 @@ def s6_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules). MERGE and CDC-diff are inverse operators; hash equality here
     pins both directions at once."""
     orders = load(spark, sf_dir, "orders")
-    merged = s6_merge_upsert(spark, sf_dir)
+    merged = s6_merge_upsert.__wrapped__(spark, sf_dir)
 
     def slim(df: DataFrame) -> DataFrame:
         return df.select(

@@ -40,8 +40,8 @@ from mta_rtf_dbt_spark.functions import text as T
 from mta_rtf_dbt_spark.operators.sampling import _A, _C, _M, mix_source_quota
 from mta_rtf_dbt_spark.operators.shard import TOKENS_PER_SHARD, shard_plan
 from mta_rtf_dbt_spark.operators.textprep import contamination_pairs
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load, spread
 
 MIN_TOKENS = 15
 MIN_LEXDIV = 0.33
@@ -122,7 +122,7 @@ def curate(
         # lazy on purpose: the deduped eager count below computes THROUGH
         # base, populating this cache in the same job — an eager count here
         # would serialize a second full materialization pass (r6)
-        base = scoped_persist(base, "pipeline.base")
+        base = persist(base)
     quality = base.filter(
         (F.col("n_tokens") >= min_tokens) & (F.col("lexdiv") >= min_lexdiv)
     )
@@ -136,7 +136,7 @@ def curate(
     deduped = quality.join(canon, ["content_hash", "doc_id"], "left_semi")
     # deduped feeds the train-shingle relation AND the clean anti-join AND
     # (via callers) funnel counts — one cache, many subtrees
-    deduped = scoped_persist(deduped, "pipeline.deduped", eager=True)
+    deduped = persist(deduped, eager=True)
 
     # held-out split comes from the RAW corpus (pre-quality) — base is the
     # same rows projected (Catalyst prunes the computed columns; when
@@ -301,7 +301,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream branch — at 100 TB you'd stage the mixed corpus to parquet
     here for exactly the same reason."""
     stages = curate(load(spark, sf_dir, "documents"))
-    mixed = scoped_persist(stages["mixed"], "pipeline.mixed", eager=True)
+    mixed = persist(stages["mixed"], eager=True)
     plan = shard_plan(mixed)
     return plan.groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -359,9 +359,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     one mixing window — each exactly once, which is also the 100 TB
     shape."""
     stages = curate(load(spark, sf_dir, "documents"), persist_base=True)
-    contaminated = scoped_persist(
-        stages["contaminated"], "pipeline.audit.contam", eager=True
-    )
+    contaminated = persist(stages["contaminated"], eager=True)
     q_cond = (F.col("n_tokens") >= MIN_TOKENS) & (F.col("lexdiv") >= MIN_LEXDIV)
     agg_base = stages["base"].agg(
         F.count(F.lit(1)).alias("n_raw"),

@@ -40,8 +40,8 @@ from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import text as T
 from mta_rtf_dbt_spark.operators.sampling import _A, _C, _M
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load, spread
 
 TOKENS_PER_SHARD = 4096
 _N_BUCKETS = 64  # prefix-sum parallelism; range-aligned with the key order
@@ -96,8 +96,8 @@ def shard_plan(
         .orderBy("shuffle_key", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = scoped_persist(
-        toks.withColumn("local_end", F.sum("n_tokens").over(wloc)), "shard.plan.local", eager=True
+    local = persist(
+        toks.withColumn("local_end", F.sum("n_tokens").over(wloc)), eager=True
     )
     boff = (
         local.groupBy("bucket")

@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import vectors as V
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load, spread
 
 DIM = 64          # testdata embedding dimensionality (TESTDATA.md)
 N_PLANES = 16
@@ -190,7 +190,7 @@ def ann_lsh_topk(
         # the broadcast side (qs) — AQE materializes the broadcast stage
         # first, populating this cache for the probe. Lazy persist (r11):
         # same sharing, one fewer materialization job.
-        sigs = scoped_persist(sigs, "ann_lsh.corpus_sigs")
+        sigs = persist(sigs)
         qids = queries.select(F.col(id_col).alias("vid"))
         qs = sigs.join(qids, "vid").withColumnRenamed("vid", "query_id")
     else:
@@ -370,17 +370,15 @@ def embedding_near_dup_pairs(
     anyway; they're the reusable index)."""
     # rep = min id per distinct vector value: one shuffle, grouped by the
     # vector itself (exact — no hash-collision risk).
-    grouped = scoped_persist(
+    grouped = persist(
         vecs.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
         .withColumn("rep", F.min("vid").over(Window.partitionBy("v"))),
-        "near_dup.groups",
         eager=True,
     )
     m = grouped.select("vid", "rep")  # thin member->rep map for expansion
     reps = grouped.filter(F.col("vid") == F.col("rep")).select("vid", "v")
-    sigs = scoped_persist(
+    sigs = persist(
         lsh_signatures(spread(reps), "vid", "v", planes=ND_PLANES, n_bands=ND_N_BANDS),
-        "near_dup.sigs",
         eager=True,
     )
     a = sigs.withColumnRenamed("vid", "ra")
@@ -807,7 +805,7 @@ def ann_ivf_cosine(spark, sf_dir):
     """IVF ANN: 8-list coarse quantizer, 2-probe search. Tests assert recall
     against the brute-force baseline and that every returned sim is exact."""
     emb = load(spark, sf_dir, "embeddings")
-    cent = scoped_persist(ivf_fit(emb, n_lists=8, iters=3), "ivf.centroids")
+    cent = persist(ivf_fit(emb, n_lists=8, iters=3))
     cent.count()
     return ivf_topk(emb, emb.filter(F.col("vec_id") < 5), cent, k=5, nprobe=2)
 
@@ -999,7 +997,7 @@ def rag_chunk_retrieval(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     # the vector index feeds BOTH retrieval sides — stage it eagerly, as
     # the persisted retrieval index it is in production
-    vec = scoped_persist(rag_chunk_vectors(docs), "rag.vec", eager=True)
+    vec = persist(rag_chunk_vectors(docs), eager=True)
     return rag_retrieve_topk(vec)
 
 

@@ -9,8 +9,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import text as T
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load, spread
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _TOKS_SQL = f"string_split({_NORM_SQL}, ' ')"
@@ -386,7 +386,7 @@ def text_phrase_search(spark, sf_dir):
     p = toks.filter(F.col("token").isin(*PHRASE)).select(
         "doc_id", "token", (F.col("pos0") + 1).cast("long").alias("pos")
     )
-    p = scoped_persist(p, "phrase.postings", eager=True)
+    p = persist(p, eager=True)
     t0 = p.filter(F.col("token") == PHRASE[0]).select("doc_id", F.col("pos").alias("p0"))
     t1 = p.filter(F.col("token") == PHRASE[1]).select(
         F.col("doc_id").alias("d1"), F.col("pos").alias("p1")

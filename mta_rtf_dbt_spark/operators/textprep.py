@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.functions import text as T
 from mta_rtf_dbt_spark.operators.dedup import shingles
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist, spread
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load, spread
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _SHINGLE_SQL = """
@@ -228,7 +228,7 @@ def bloom_screen(
     carries the held-out relation; the only wide exchange is the training
     side's per-doc aggregate."""
     hb = sh.select("doc_id", T.poly_hash(F.col("shingle")).alias("hb"))
-    hb = scoped_persist(hb, "bloom.hb", eager=True)
+    hb = persist(hb, eager=True)
     pos_arr = F.array(
         *[
             F.pmod(F.pmod(F.col("hb") * a + b, F.lit(T.POLY_MOD)), F.lit(BLOOM_M))
@@ -500,8 +500,8 @@ def pack_sequences(
     )
     # phase-1 feeds both the bucket totals and the final offset join —
     # persist or the token-count scan runs twice (same fix as shard_plan)
-    local = scoped_persist(
-        toks.withColumn("local_end", F.sum("n_tokens").over(wloc)), "pack.local", eager=True
+    local = persist(
+        toks.withColumn("local_end", F.sum("n_tokens").over(wloc)), eager=True
     )
     btot = local.groupBy("bucket").agg(F.max("local_end").alias("btotal"))
     boff = btot.withColumn(
@@ -990,7 +990,7 @@ def text_bm25_topk(spark, sf_dir):
     tk = spread(docs).select(
         "doc_id", F.explode(T.tokens(T.normalize(F.col("text")))).alias("token")
     )
-    tk = scoped_persist(tk, "bm25.tokens", eager=True)
+    tk = persist(tk, eager=True)
     dl = tk.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
     corpus = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -34,7 +34,7 @@ from mta_rtf_dbt_spark.plans.mta_oracle import (
     STOP_A,
     STOP_B,
 )
-from mta_rtf_dbt_spark.registry import q
+from mta_rtf_dbt_spark.registry import persist, q
 from mta_rtf_dbt_spark.sources.fixtures import MTA_TABLES, ensure_fixtures
 from mta_rtf_dbt_spark.sources.registry import load
 
@@ -60,17 +60,13 @@ def _src(spark: SparkSession) -> dict[str, DataFrame]:
 
 
 def _models(spark: SparkSession) -> dict[str, DataFrame]:
-    """The models over the fixture, with the stop-level model persisted. The
-    driver runs 16 mta_* entries back to back and every one reads
-    fact_trips_stops; production materializes the model once (S3/S4) and
-    points all metrics at it, so the gate pays the chain once too:
-    ``build_all`` returns the same frames while the session, its confs and
-    the fixture files are unchanged, so the persist happens once."""
+    """The models over the fixture, with the stop-level model persisted for
+    the entry being built, so a plan that reads it more than once (M7 reads
+    it at both stops) builds the chain once."""
     from mta_rtf_dbt_spark.plans.mta_models import build_all
 
     models = build_all(spark, _src(spark), register_views=False)
-    if not models["fact_trips_stops"].is_cached:
-        models["fact_trips_stops"].persist()
+    persist(models["fact_trips_stops"])
     return models
 
 

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist
+from mta_rtf_dbt_spark.registry import persist, q
+from mta_rtf_dbt_spark.sources.registry import load
 
 
 def _dec(c, scale: int = 4):
@@ -891,7 +891,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eu_offer feeds BOTH sides of the correlated-min equijoin. The initial
     # plan prints two offer shuffles, but AQE's runtime stage cache dedupes
     # the identical exchange, so the offer aggregate executes once already;
-    # an eager scoped_persist here was tried in r11 and measured +0.2 s at
+    # an eager persist here was tried in r11 and measured +0.2 s at
     # sf0.1 (a serialized cache materialization for a reuse AQE provides
     # for free) — deliberately left unpersisted.
     eu_offer = offer.join(eu, offer.l_suppkey == eu.s_suppkey)
@@ -955,8 +955,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-free (value > 1.5x the mean part value, so it selects at every SF)
     and compared as value*2n > 3*total — integer-scaled DECIMAL, no float
     edge in either engine."""
-    from mta_rtf_dbt_spark.sources.registry import scoped_persist
-
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
@@ -966,7 +964,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey")
     )
-    val = scoped_persist(
+    val = persist(
         li.join(eu, li.l_suppkey == eu.s_suppkey)
         .groupBy("l_partkey")
         .agg(
@@ -974,7 +972,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "part_value"
             )
         ),
-        "tpch.q11.val",
         eager=True,
     )
     total = val.agg(

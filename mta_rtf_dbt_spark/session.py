@@ -66,9 +66,10 @@ _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 BUILD_CONFS: dict[str, str] = {
     # Local mode runs everything in ONE JVM, so spark.driver.memory IS the
     # executor memory; the 1g default dies on full-registry sf0.1 sweeps
-    # (measured: JVM crash ~160 entries in — accumulated scoped caches +
-    # localCheckpoints). Launch-time only: applies to the first session the
-    # process builds, which get_spark controls in tests/bench.
+    # (measured: JVM crash ~160 entries in, when caches outlived their
+    # entries; now one entry's caches plus not-yet-collected
+    # localCheckpoints stay live). Launch-time only: applies to the first
+    # session the process builds, which get_spark controls in tests/bench.
     "spark.driver.memory": _DRIVER_MEM,
     # BroadcastExchange collects count against spark.driver.maxResultSize,
     # whose 1g default is sized for accidental .collect()s, not deliberate

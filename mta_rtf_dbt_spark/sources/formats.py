@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mta_rtf_dbt_spark.registry import q
-from mta_rtf_dbt_spark.sources.registry import load, scoped_persist
+from mta_rtf_dbt_spark.sources.registry import load
 
 CSV_OPTS = {
     "header": "true",
@@ -173,23 +173,18 @@ def source_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(tmp + "/lines")
     )
-    # Spark refuses plans that filter on only the internal corrupt-record
-    # column of a live JSON scan — the documented contract is to cache the
-    # parsed result first (which the quarantine pattern wants anyway: one
-    # parse feeding both the good and quarantined branches)
-    parsed = scoped_persist(parsed, "formats.corrupt.parsed", eager=True)
-    good = parsed.filter(F.col("_corrupt_record").isNull())
-    bad = parsed.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.regexp_extract(F.col("_corrupt_record"), r'"doc_id": (\d+)', 1)
-        .cast("long")
-        .alias("bad_id")
+    # one aggregate reads doc_id beside the corrupt-record column: Spark
+    # refuses a raw JSON scan that reads the corrupt-record column alone,
+    # and a quarantine branch of its own would need the parse cached
+    bad = F.col("_corrupt_record").isNotNull()
+    bad_id = F.regexp_extract(F.col("_corrupt_record"), r'"doc_id": (\d+)', 1)
+
+    def id_sum(ids):
+        return F.coalesce(F.sum(ids), F.lit(0)).cast("long")
+
+    return parsed.agg(
+        F.count(F.when(~bad, 1)).cast("long").alias("n_good"),
+        F.count(F.when(bad, 1)).cast("long").alias("n_corrupt"),
+        id_sum(F.when(~bad, F.col("doc_id"))).alias("good_id_sum"),
+        id_sum(F.when(bad, bad_id.cast("long"))).alias("corrupt_id_sum"),
     )
-    g = good.agg(
-        F.count(F.lit(1)).cast("long").alias("n_good"),
-        F.coalesce(F.sum("doc_id"), F.lit(0)).cast("long").alias("good_id_sum"),
-    )
-    b = bad.agg(
-        F.count(F.lit(1)).cast("long").alias("n_corrupt"),
-        F.coalesce(F.sum("bad_id"), F.lit(0)).cast("long").alias("corrupt_id_sum"),
-    )
-    return g.crossJoin(b).select("n_good", "n_corrupt", "good_id_sum", "corrupt_id_sum")

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
-from mta_rtf_dbt_spark.registry import q
+from mta_rtf_dbt_spark.registry import persist, q
 
 
 def flatten_struct_paths(df: DataFrame, sep: str = "__") -> DataFrame:
@@ -128,8 +128,6 @@ def ingest_flatten_roundtrip(spark, sf_dir):
     itself."""
     from mta_rtf_dbt_spark.sources.registry import load
 
-    from mta_rtf_dbt_spark.sources.registry import scoped_persist
-
     li = load(spark, sf_dir, "lineitem")
     nested = li.groupBy(F.col("l_orderkey").alias("o_orderkey")).agg(
         F.collect_list(
@@ -144,7 +142,7 @@ def ingest_flatten_roundtrip(spark, sf_dir):
     )
     # parent and child both derive from the nested relation; persist it so
     # the collect_list aggregate runs once, not once per side of the FK join
-    nested = scoped_persist(nested, "ingest.nested", eager=True)
+    nested = persist(nested, eager=True)
     parent, child = flatten_parent_child(nested, "items", ["o_orderkey"], "load_0001")
     return child.join(
         parent.select("_dlt_id", "o_orderkey"),

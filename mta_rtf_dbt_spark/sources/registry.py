@@ -210,41 +210,6 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-_SCOPED_PERSISTS: dict[str, DataFrame] = {}
-
-
-def scoped_persist(df: DataFrame, scope: str, eager: bool = False) -> DataFrame:
-    """Persist ``df``, releasing whatever an earlier invocation persisted
-    under the same scope key.
-
-    Operators that persist an intermediate (signature tables, shingle
-    relations feeding both sides of a self-join) get called repeatedly in one
-    session by the bench harness and the driver gate; a bare ``.persist()``
-    per call pins executor storage without bound and measurably degrades
-    later runs. One live cache per (operator, intermediate) is the intent —
-    this makes that lifecycle explicit.
-
-    ``eager=True`` materializes the cache immediately (one count). Use it
-    when the persisted relation feeds MULTIPLE sibling stages of one
-    downstream action: Spark schedules independent stages of a job
-    concurrently, and every stage that reaches a not-yet-materialized
-    InMemoryRelation computes the underlying subtree itself — the cache
-    dedupes storage, not concurrent work. Serializing the materialization
-    is exactly the staging write a production pipeline does between passes
-    (measured: the one-action curation entry dropped ~40% at sf0.1)."""
-    old = _SCOPED_PERSISTS.pop(scope, None)
-    if old is not None:
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
-    df = df.persist()
-    _SCOPED_PERSISTS[scope] = df
-    if eager:
-        df.count()
-    return df
-
-
 def register_all(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, tables: list[str] | None = None
 ) -> dict[str, DataFrame]:

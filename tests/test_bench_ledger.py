@@ -26,10 +26,7 @@ def traced(spark):
     for name in (*EAGER, LAZY):
         bench.traced_rep(tr, name, qs[name], spark, SF_SMOKE)
     tr.collect()
-    yield tr, bench.ledger(tr)
-    # the entry persists the memoized model frame that later tests plan
-    # uncached (tests/test_plans.py); leave the shared session as found
-    qs[LAZY](spark, SF_SMOKE).unpersist()
+    return tr, bench.ledger(tr)
 
 
 def test_build_jobs_are_split_from_the_action(traced):
@@ -53,3 +50,23 @@ def test_ledger_holds_every_store_job_once(traced, spark):
     )
     assert in_store > 0
     assert sum(rep["jobs"] for reps in led.values() for rep in reps) == in_store
+
+
+def test_rep_counts_do_not_depend_on_the_entry_before(spark):
+    """A rep measures its entry alone: traced after the funnel, whose
+    persists cover part of its plan, the pipeline fires the build jobs it
+    fires when traced first (a funnel cache left live cut them from 23 to
+    14). Only build jobs are compared: the action's job count moves by two
+    from run to run with AQE's choice of broadcast side. (Last in the
+    module: the fixture's tracer stays alive, so the two tracers' job-group
+    prefixes differ.)"""
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    tr = Tracer(spark.sparkContext, True)
+    pipeline, funnel = "corpus_curation_pipeline", "corpus_curation_funnel"
+    for name in (pipeline, funnel, pipeline, pipeline):
+        bench.traced_rep(tr, name, qs[name], spark, SF_SMOKE)
+    tr.collect()
+    counts = [r["jobs_in_build"] for r in bench.ledger(tr)[pipeline]]
+    assert counts == [counts[0]] * 3, counts

@@ -165,12 +165,10 @@ def test_edge_triangles_fallback_matches_broadcast(spark, monkeypatch):
     import warnings
 
     from mta_rtf_dbt_spark.operators import graph as g
-    from mta_rtf_dbt_spark.sources.registry import scoped_persist
+    from mta_rtf_dbt_spark.registry import persist
 
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (3, 5), (1, 4), (2, 5)]
-    pairs = scoped_persist(
-        spark.createDataFrame(edges, "u long, v long"), "test.tri.fb", eager=True
-    )
+    pairs = persist(spark.createDataFrame(edges, "u long, v long"), eager=True)
 
     def run():
         rows = g._edge_triangles(pairs).collect()

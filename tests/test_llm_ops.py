@@ -169,17 +169,18 @@ def test_ivf_nprobe_recall_sweep(spark):
     import __spark_entry__ as e
     from pyspark.sql import functions as F
     from mta_rtf_dbt_spark.operators.similarity import ivf_fit, ivf_topk
-    from mta_rtf_dbt_spark.sources.registry import load, scoped_persist
+    from mta_rtf_dbt_spark.registry import persist
+    from mta_rtf_dbt_spark.sources.registry import load
 
-    emb = load(spark, SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    cent = scoped_persist(ivf_fit(emb, n_lists=8, iters=3), "test.ivf.sweep")
-    cent.count()
-
+    # the brute-force entry's build releases every earlier persist, so it
+    # runs before the centroids are cached for the sweep
     brute = {
         (r.query_id, r.neighbor_id)
         for r in e.queries()["knn_brute_force_cosine"](spark, SF).collect()
     }
+    emb = load(spark, SF, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    cent = persist(ivf_fit(emb, n_lists=8, iters=3), eager=True)
     recalls = []
     for nprobe in (1, 2, 4, 8):
         ivf = {

@@ -115,3 +115,55 @@ def test_registry_entries_pin_session(spark):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_entry_build_releases_the_previous_entrys_caches(spark):
+    """A cache lives for one entry: after three entries with eager persists
+    are built and counted in turn, the cached RDDs the three made are the
+    last entry's only. Local checkpoints are not persists (Spark's
+    ContextCleaner drops them with their frames) and are not counted."""
+    import __spark_entry__ as e
+    from tests.conftest import SF_SMOKE
+
+    qs = e.queries()
+    sc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds() -> set[int]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        ids = (int(k) for k in rdds.keySet().toArray())
+        return {i for i in ids if not rdds.get(i).rdd().isLocallyCheckpointed()}
+
+    start = sc.newRddId()
+    for name in ("corpus_curation_funnel", "dedup_keep_best", "graph_pagerank"):
+        last_start = sc.newRddId()
+        qs[name](spark, SF_SMOKE).count()
+    live = {i for i in cached_rdds() if i > start}
+    assert live and min(live) > last_start, (sorted(live), last_start)
+
+
+def test_nested_entry_build_keeps_the_outer_persists(spark, monkeypatch):
+    """s6_cdc_diff builds s6_merge_upsert inside its own build. The nested
+    build releases nothing: what the outer build persisted before it stays
+    cached until the next entry builds."""
+    import __spark_entry__ as e
+    from pyspark.sql import functions as F
+
+    from mta_rtf_dbt_spark import registry
+    from mta_rtf_dbt_spark.operators import merge
+    from tests.conftest import SF_SMOKE
+
+    real, made = merge.load, []
+
+    def load(spark, sf_dir, name):
+        # a distinct plan per call, so each persist is a cache of its own
+        df = real(spark, sf_dir, name).filter(F.lit(len(made)) >= 0)
+        made.append(registry.persist(df))
+        return made[-1]
+
+    monkeypatch.setattr(merge, "load", load)
+    qs = e.queries()
+    qs["s6_cdc_diff"](spark, SF_SMOKE)
+    assert len(made) == 2
+    assert all(df.storageLevel.useMemory for df in made)
+    qs["q1_pricing_summary"](spark, SF_SMOKE)
+    assert not any(df.storageLevel.useMemory for df in made)

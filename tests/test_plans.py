@@ -19,11 +19,12 @@ def _plan(df) -> str:
 
 
 def _uncached(spark):
-    """Pushdown/pruning assertions need UNCACHED plans: once the driver
-    entries' model memoization persists fact_trips_stops (plans/mta_driver),
-    the cache manager substitutes the InMemoryRelation into any identical
-    subtree and the scan under test disappears. Clearing is safe — scoped
-    persists recompute on next use."""
+    """Pushdown/pruning assertions need UNCACHED plans: while an mta_* entry's
+    persist of fact_trips_stops (plans/mta_driver) is live, the cache manager
+    substitutes the InMemoryRelation into any identical subtree and the scan
+    under test disappears. The tests plan a fresh Dataset (``select("*")``)
+    over the memoized model frame: the frame itself keeps the plan it got
+    when it was first executed, with whatever cache was live then."""
     spark.catalog.clearCache()
 
 
@@ -31,7 +32,7 @@ def test_filter_pushes_through_model_chain(spark, mta_models):  # noqa: F811
     """EP2: fact_delays inlines fact_trips_stops inlines 4 sources; the
     feed='main' filter must reach the trip_updates parquet scan."""
     _uncached(spark)
-    plan = _plan(mta_models["fact_delays"])
+    plan = _plan(mta_models["fact_delays"].select("*"))
     assert "PushedFilters" in plan
     assert "EqualTo(feed,main)" in plan, plan[:4000]
 
@@ -229,10 +230,10 @@ def test_mta_builds_stay_within_py4j_budget(spark, mta_dir, mta_fresh, monkeypat
 
 
 def test_persisted_model_substitutes_into_metric_plans(spark, mta_fresh):
-    """plans/mta_driver persists fact_trips_stops once and points all 12
-    metrics at it: every metric plan, fact_trips' (M10/M11) included, must
-    read the cached relation, not rebuild the model from its sources, and
-    building the metrics must leave the model cached."""
+    """plans/mta_driver persists fact_trips_stops for the entry it builds:
+    every metric plan, fact_trips' (M10/M11) included, must read the cached
+    relation, not rebuild the model from its sources, and building the
+    metrics must leave the model cached."""
     from tests.test_mta_metrics import CASES
 
     src, models = mta_fresh
