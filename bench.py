@@ -23,16 +23,37 @@ timed rep runs its build and its terminal count as two spans of
 ``bench_detail.json["ledger"]`` gets, per entry and per rep, the build and
 action seconds, jobs fired during the build (eager persists, probes, loop
 checkpoints) and in all, stages, tasks, executor run/CPU/GC seconds, and
-shuffle read/write and spill bytes. The warm-up pass and the two streaming
-sinks are not traced.
+shuffle read/write and spill bytes, and the generated classes Spark compiled
+(``codegen_classes``: misses in its codegen cache). The warm-up pass and the
+two streaming sinks are not traced.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
 import time
+
+from mta_rtf_dbt_spark.session import codegen_compiles, default_parallelism, pin_session
+from perfbench import spans
+
+
+class Tracer(spans.Tracer):
+    """perfbench's tracer, enabled, that also counts in ``classes`` (by span
+    id) the generated classes each call compiled. The counter is read around
+    the call, outside the span's timed interval."""
+
+    def __init__(self, spark):
+        super().__init__(spark.sparkContext, True)
+        self.spark = spark
+        self.classes: dict[int, int] = {}
+
+    def call(self, layer: str, fn, *args):
+        span_id, before = len(self.spans), codegen_compiles(self.spark)
+        try:
+            return super().call(layer, fn, *args)
+        finally:
+            self.classes[span_id] = codegen_compiles(self.spark) - before
 
 
 def traced_rep(tr, name: str, fn, spark, sf_dir: str) -> float:
@@ -75,6 +96,8 @@ def ledger(tr) -> dict[str, list[dict]]:
             "shuffle_read_bytes": total("shuffle_read_bytes"),
             "shuffle_write_bytes": total("shuffle_write_bytes"),
             "spill_bytes": total("spill_bytes"),
+            "codegen_classes_in_build": tr.classes[build.id],
+            "codegen_classes": tr.classes[build.id] + tr.classes[action.id],
         })
     return out
 
@@ -91,11 +114,7 @@ def main() -> None:
     load_start = list(os.getloadavg())
     t_wall_start = time.time()
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
-
-    from mta_rtf_dbt_spark.session import default_parallelism, pin_session
-    from perfbench.spans import Tracer
 
     cpus = str(default_parallelism())
 
@@ -181,10 +200,14 @@ def main() -> None:
     ]
 
     # untimed warmup: run every headline shape once at the smallest SF so
-    # whole-stage-codegen JIT, shuffle/broadcast infra, and file-listing init
-    # aren't attributed to the timed run (measured: first execution of an
-    # LSH/minhash-shaped plan carries ~3-5s of one-time JIT regardless of
-    # data size — fixed cost, not the scale story this bench tracks)
+    # HotSpot's JIT of Spark's own code, shuffle/broadcast infra, and
+    # file-listing init aren't attributed to the timed run (measured: first
+    # execution of an LSH/minhash-shaped plan carries ~3-5s of one-time JIT
+    # regardless of data size). It does NOT warm the generated classes:
+    # like the driver's, this session keeps Spark's 100-entry codegen cache
+    # (BUILD_CONFS' larger one is static and reaches neither), and a pass
+    # compiles ~1 150 classes, so each rep compiles its entry's classes
+    # again; the ledger's codegen_classes counts them per rep.
     from mta_rtf_dbt_spark.sources.registry import load
 
     load(spark, sf_dir, "lineitem").count()
@@ -210,12 +233,14 @@ def main() -> None:
     # claim at most one of them and the median stays honest. Each rep
     # rebuilds the plan from scratch, and building an entry releases every
     # cache the entry before it persisted, so no rep reads another's cache;
-    # what carries over is the OS page cache and the JVM's compiled code
-    # (warm for every rep equally, the steady state a real cluster sees).
+    # what carries over is the OS page cache and HotSpot's JIT of Spark's
+    # own code (warm for every rep equally). Generated classes do not: the
+    # 100-entry codegen cache evicts an entry's classes long before the
+    # next pass comes round to it (ledger codegen_classes).
     _REPS = 3
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {name: [] for name in headline if name in qs}
-    tr = Tracer(spark.sparkContext, True)
+    tr = Tracer(spark)
     for _ in range(_REPS):
         for name in headline:
             fn = qs.get(name)

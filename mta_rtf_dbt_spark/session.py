@@ -93,7 +93,36 @@ BUILD_CONFS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "256m",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.parquet.compression.codec": "snappy",
+    # Spark compiles each generated class once and keeps it in a cache of
+    # this many entries (default 100). A perfbench cookbook pass compiles
+    # ~210 classes, a pass over bench.py's 48 traced entries ~1 150, so at
+    # the default every workload evicts its own classes before it reuses
+    # them: on mta-refresh the 6 metrics between two refreshes evict the 73
+    # classes the first refresh compiled, and the second compiles 69 of
+    # them again (tools/codegen_census.py). 4000 holds a whole pass of
+    # either; a warm cookbook pass then compiles no class. The cache keeps
+    # each class and its loader alive: on mta-refresh, ~210 retained classes
+    # moved the driver's peak RSS by under 1 % (median of 10 run pairs).
+    # Static: it reaches the sessions get_spark and perfbench build, not
+    # the driver's (nor bench.py's, which stands in for it).
+    "spark.sql.codegen.cache.maxEntries": "4000",
+    # A whole-stage class is named after its codegen stage id, and AQE
+    # numbers a plan's codegen stages in the order its query stages are
+    # re-planned, which follows the order they finish. The same stage's
+    # source then differs only in that name from run to run (M3 compiled 8
+    # such classes per warm pass on mta-refresh), and the cache misses.
+    # Without the id every class is "GeneratedIterator", each in its own
+    # class loader; the generated code is otherwise the same.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far. Spark compiles a class
+    only on a miss in its codegen cache, so the difference of two readings
+    counts the misses in between (in every session of the JVM)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def default_parallelism() -> int:

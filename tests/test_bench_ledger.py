@@ -1,14 +1,15 @@
 """bench.py's ledger: each timed rep runs its build and its terminal count as
 two traced spans, and every job Spark records under the tracer's job groups
 lands in exactly one entry's ledger record, eager build jobs apart from the
-action's."""
+action's; the generated classes each rep compiled are counted with them."""
 
 from __future__ import annotations
+
+import random
 
 import pytest
 
 import bench
-from perfbench.spans import Tracer
 from tests.conftest import SF_SMOKE
 
 # two entries that fire jobs while their plan is built (eager persists, loop
@@ -22,7 +23,7 @@ def traced(spark):
     import __spark_entry__ as e
 
     qs = e.queries()
-    tr = Tracer(spark.sparkContext, True)
+    tr = bench.Tracer(spark)
     for name in (*EAGER, LAZY):
         bench.traced_rep(tr, name, qs[name], spark, SF_SMOKE)
     tr.collect()
@@ -63,10 +64,32 @@ def test_rep_counts_do_not_depend_on_the_entry_before(spark):
     import __spark_entry__ as e
 
     qs = e.queries()
-    tr = Tracer(spark.sparkContext, True)
+    tr = bench.Tracer(spark)
     pipeline, funnel = "corpus_curation_pipeline", "corpus_curation_funnel"
     for name in (pipeline, funnel, pipeline, pipeline):
         bench.traced_rep(tr, name, qs[name], spark, SF_SMOKE)
     tr.collect()
     counts = [r["jobs_in_build"] for r in bench.ledger(tr)[pipeline]]
     assert counts == [counts[0]] * 3, counts
+
+
+def test_codegen_classes_count_cache_misses(spark):
+    """``codegen_classes`` counts the classes a rep compiled, which Spark
+    does only on a miss in its codegen cache: a plan holding a literal no
+    plan held before compiles at least one class, and the same plan run
+    again right after compiles none. The literal is a long: Spark writes
+    numeric literals into the generated source but passes a string literal
+    to the class by reference, so a new string alone compiles nothing."""
+    from pyspark.sql import functions as F
+
+    never_seen = random.getrandbits(62)
+
+    def plan(spark, sf_dir):
+        return spark.range(100).filter(F.col("id") * 3 != F.lit(never_seen))
+
+    tr = bench.Tracer(spark)
+    for _ in range(2):
+        bench.traced_rep(tr, "never_seen", plan, spark, SF_SMOKE)
+    first, second = (r["codegen_classes"] for r in bench.ledger(tr)["never_seen"])
+    assert first >= 1
+    assert second == 0
